@@ -229,7 +229,6 @@ def ngram_jaccard_pairs(
     n: int = 1,
     tokens_col: str | None = None,
     block_window: int | None = None,
-    persist: bool = True,
     bitset_max_vocab: int = 256,
 ) -> DataFrame:
     """Near-dup pairs by token/{n}-gram Jaccard within a blocking key.
@@ -320,7 +319,9 @@ def ngram_jaccard_pairs(
             .limit(bitset_max_vocab + 1)
             .collect()
         ]
-        if len(probe) <= bitset_max_vocab and all(
+        # an empty vocabulary (empty corpus, all-empty token arrays)
+        # has no bitset: zero mask words would build an empty SQL sum
+        if probe and len(probe) <= bitset_max_vocab and all(
             isinstance(v, int) for v in probe
         ):
             vocab = sorted(probe)
@@ -344,7 +345,7 @@ def ngram_jaccard_pairs(
         )
         # the compact mask summary (8*nw+4 bytes/doc) is what the two
         # verify sides re-read — cache IT, not the token arrays
-        summary = cache.track(summary) if persist else summary
+        summary = cache.track(summary)
         ranked = blocked_rank(summary.select("id", "block"), "block", "id")
         probes = ranked.select(
             F.col("id").alias("id_a"),
@@ -383,7 +384,7 @@ def ngram_jaccard_pairs(
         )
 
     # token arrays are read twice (both verify sides)
-    base = cache.track(base) if persist else base
+    base = cache.track(base)
     ranked = blocked_rank(base.select("id", "block"), "block", "id")
     # REPARTITION after the W-way explode: the slim ranked frame is tiny,
     # so AQE coalesces its shuffle to ~1 partition, and with only
@@ -480,7 +481,7 @@ def minhash_signatures(
 
 def _minhash_per_doc(
     df: DataFrame, id_col: str, text_col: str,
-    n: int, num_hashes: int, seed: int, persist: bool = True,
+    n: int, num_hashes: int, seed: int,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Shared single-pass (id, signature, shingles) summary used by both
@@ -498,8 +499,7 @@ def _minhash_per_doc(
     ``spark.catalog.clearCache()`` between queries (bench.py and
     scripts/check_oracle.py do); library callers release engine-owned
     caches with ``operators.cache.release_tracked()`` — every persist
-    here routes through that registry — or pass ``persist=False`` to
-    keep the operator persist-free (recomputing the summary per read).
+    here routes through that registry.
     """
     from data_integration_case_study_spark.operators import cache
 
@@ -509,7 +509,7 @@ def _minhash_per_doc(
         .agg(*_minima_aggs(num_hashes, seed), F.collect_set("h").alias("shingles"))
         .select("id", _signature_array(num_hashes), "shingles")
     )
-    return cache.track(out) if persist else out
+    return cache.track(out)
 
 
 def _band_buckets(per_doc: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -540,7 +540,6 @@ def minhash_candidate_pairs(
     n: int = 3, num_hashes: int = 32, bands: int = 8,
     threshold: float = 0.5, seed: int = 42,
     bucket_window: int | None = None,
-    persist_summary: bool = True,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs: signature -> band buckets -> bucket-local
@@ -569,11 +568,10 @@ def minhash_candidate_pairs(
     """
     # per_doc is read three times (banding + both sides of the verify
     # join); _minhash_per_doc persists it so Spark does not re-shingle and
-    # re-hash the corpus for each read (persist_summary=False opts out —
-    # see _minhash_per_doc's cache-lifecycle note).
+    # re-hash the corpus for each read (see _minhash_per_doc's
+    # cache-lifecycle note).
     per_doc = _minhash_per_doc(
-        df, id_col, text_col, n, num_hashes, seed,
-        persist=persist_summary, tokens_col=tokens_col,
+        df, id_col, text_col, n, num_hashes, seed, tokens_col=tokens_col
     )
     banded = _band_buckets(per_doc, num_hashes, bands)
 
@@ -617,7 +615,6 @@ def minhash_incremental_pairs(
     new_df: DataFrame, corpus_df: DataFrame, id_col: str, text_col: str,
     n: int = 3, num_hashes: int = 32, bands: int = 8,
     threshold: float = 0.5, seed: int = 42,
-    persist_summary: bool = True,
 ) -> DataFrame:
     """Incremental (cross-corpus) MinHash dedup: near-dup pairs between an
     INCOMING batch and an already-retained corpus — the steady-state form
@@ -635,12 +632,8 @@ def minhash_incremental_pairs(
     Returns (new_id, dup_of, jaccard): incoming docs near-duplicating a
     corpus doc at >= threshold.
     """
-    new_pd = _minhash_per_doc(
-        new_df, id_col, text_col, n, num_hashes, seed, persist=persist_summary
-    )
-    corp_pd = _minhash_per_doc(
-        corpus_df, id_col, text_col, n, num_hashes, seed, persist=persist_summary
-    )
+    new_pd = _minhash_per_doc(new_df, id_col, text_col, n, num_hashes, seed)
+    corp_pd = _minhash_per_doc(corpus_df, id_col, text_col, n, num_hashes, seed)
     cand = (
         _band_buckets(new_pd, num_hashes, bands)
         .withColumnRenamed("id", "new_id")

@@ -425,7 +425,7 @@ def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     the merge property that lets per-shard / per-day / per-microbatch
     sketches roll up without re-reading data. Unlike KMV's merge this
     one is NOT idempotent (counters add), so streaming maintenance must
-    gate on the batch id (streaming/sketches.streaming_cms_sketch)."""
+    skip replayed batches (streaming/state.drain_into)."""
     return (
         a.unionByName(b)
         .groupBy("row", "col")
@@ -522,9 +522,8 @@ def hll_merge_registers(
 ) -> DataFrame:
     """Element-wise max of two register tables: sketch(A ∪ B) ==
     merge(sketch(A), sketch(B)) exactly. Unlike count-min (whose merge
-    ADDS and therefore needs a replay guard in streaming), max is
-    IDEMPOTENT — re-merging a replayed microbatch is a no-op, the same
-    safety class as KMV's re-rank."""
+    ADDS), max is IDEMPOTENT — re-merging the same rows is a no-op, the
+    same safety class as KMV's re-rank."""
     return (
         a.unionByName(b)
         .groupBy(*group_cols, "__bucket")
@@ -665,8 +664,8 @@ def ams_counters(
 def ams_merge(a: DataFrame, b: DataFrame, group_cols: list[str], d: int = 9) -> DataFrame:
     """Column-wise sum of two AMS counter tables (same d/seed): the
     sketch of the concatenated inputs (proven in tests). Addition is
-    NOT idempotent, so streaming maintenance gates on the batch id
-    exactly like count-min (streaming/sketches.streaming_ams_sketch)."""
+    NOT idempotent, so streaming maintenance skips replayed batches
+    exactly like count-min (streaming/state.drain_into)."""
     return (
         a.unionByName(b)
         .groupBy(*group_cols)

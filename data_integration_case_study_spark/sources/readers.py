@@ -101,6 +101,30 @@ def load_tables(
     return {name: read_parquet_table(spark, sf_dir, name) for name in names}
 
 
+def _quarantine(reader, schema, corrupt_column: str | None):
+    """Shared ``corrupt_column`` contract of the text readers: append the
+    raw-record string column to the explicit schema and switch the
+    reader to PERMISSIVE mode routing malformed records into it.
+    Returns ``(reader, schema)``; a no-op when ``corrupt_column`` is
+    None."""
+    if corrupt_column is None:
+        return reader, schema
+    if schema is None:
+        raise ValueError("corrupt_column requires an explicit schema")
+    if isinstance(schema, str):
+        schema = f"{schema}, {corrupt_column} string"
+    else:
+        from pyspark.sql.types import StringType, StructField
+
+        schema = StructType(
+            [*schema.fields, StructField(corrupt_column, StringType())]
+        )
+    reader = reader.option("mode", "PERMISSIVE").option(
+        "columnNameOfCorruptRecord", corrupt_column
+    )
+    return reader, schema
+
+
 def read_csv(
     spark: SparkSession,
     path: str,
@@ -119,21 +143,10 @@ def read_csv(
     that extra string column instead of silently becoming nulls or
     failing the job — at 100 TB you route that column to a quarantine
     sink and keep loading. Requires an explicit schema."""
-    reader = spark.read.options(sep=sep, header=str(header).lower())
-    if corrupt_column is not None:
-        if schema is None:
-            raise ValueError("corrupt_column requires an explicit schema")
-        if isinstance(schema, str):
-            schema = f"{schema}, {corrupt_column} string"
-        else:
-            from pyspark.sql.types import StringType, StructField
-
-            schema = StructType(
-                [*schema.fields, StructField(corrupt_column, StringType())]
-            )
-        reader = reader.option("mode", "PERMISSIVE").option(
-            "columnNameOfCorruptRecord", corrupt_column
-        )
+    reader, schema = _quarantine(
+        spark.read.options(sep=sep, header=str(header).lower()),
+        schema, corrupt_column,
+    )
     if schema is not None:
         reader = reader.schema(schema)
     else:
@@ -156,21 +169,7 @@ def read_jsonl(
     failing the job or becoming silent nulls. Requires an explicit schema
     when quarantining. At scale the ingest step converts JSONL to parquet
     once; everything downstream scans parquet."""
-    reader = spark.read
-    if corrupt_column is not None:
-        if schema is None:
-            raise ValueError("corrupt_column requires an explicit schema")
-        if isinstance(schema, str):
-            schema = f"{schema}, {corrupt_column} string"
-        else:
-            from pyspark.sql.types import StringType, StructField
-
-            schema = StructType(
-                [*schema.fields, StructField(corrupt_column, StringType())]
-            )
-        reader = reader.option("mode", "PERMISSIVE").option(
-            "columnNameOfCorruptRecord", corrupt_column
-        )
+    reader, schema = _quarantine(spark.read, schema, corrupt_column)
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
@@ -281,44 +280,22 @@ def read_xlsx(
 
     XLSX is a zip container — inherently non-splittable — so a distributed
     read is impossible; the reference only ever reads a small relations
-    sheet this way. Uses pandas+openpyxl when available; otherwise falls
-    back to the pure-stdlib parser (:func:`_parse_xlsx`), so the engine
-    has NO hard dependency for XLSX ingest."""
-    header: list[str]
-    rows: list[list]
-    try:
-        import pandas as pd
+    sheet this way. Parsed by the pure-stdlib :func:`_parse_xlsx`, so the
+    engine has NO dependency for XLSX ingest and the output does not
+    depend on which optional packages are installed.
 
-        pdf = pd.read_excel(path, sheet_name=sheet_name)
-        pdf = pdf.astype(object).where(pd.notnull(pdf), None)
-        header = [str(c) for c in pdf.columns]
-        # pandas reads numeric columns as float64, so an integral cell
-        # would stringify as '42.0' while the stdlib path yields '42';
-        # collapse integral floats so untyped ingest is identical under
-        # either optional dependency (np.float64 subclasses float)
-        rows = [
-            [
-                int(v) if isinstance(v, float) and v.is_integer() else v
-                for v in r
-            ]
-            for r in pdf.values.tolist()
-        ]
-    except ImportError:
-        header, rows = _parse_xlsx(path, sheet_name)
-    if schema is None:
-        # Excel cells are untyped; stringify and let callers cast —
-        # mirroring the reference's parse-after-read (insert.py:110-115)
-        sdf = spark.createDataFrame(
-            [[None if v is None else str(v) for v in r] for r in rows],
-            schema=", ".join(f"`{h}` string" for h in header),
-        )
-        return sdf
-    from pyspark.sql import functions as F
-
+    Excel cells are untyped: every column arrives as a string (dates as
+    their serial numbers) and ``schema``, when given, casts by name —
+    mirroring the reference's parse-after-read (insert.py:110-115)."""
+    header, rows = _parse_xlsx(path, sheet_name)
     sdf = spark.createDataFrame(
         [[None if v is None else str(v) for v in r] for r in rows],
         schema=", ".join(f"`{h}` string" for h in header),
     )
+    if schema is None:
+        return sdf
+    from pyspark.sql import functions as F
+
     return sdf.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )

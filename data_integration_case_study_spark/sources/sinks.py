@@ -16,6 +16,9 @@ Spark-side equivalents:
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 
 
@@ -54,6 +57,55 @@ def assert_not_null(df: DataFrame, cols: list[str]) -> DataFrame:
     return df
 
 
+def commit_dir(path: str, write) -> None:
+    """Replace the directory ``path`` whole with what ``write(staging)``
+    produces — the one commit every sink and streaming state loop goes
+    through (the reference's ``to_sql(if_exists='replace')``, reference
+    insert.py:70-84).
+
+    ``write`` fills a staging directory; only after it returns is the
+    live copy renamed aside, staging renamed live, and the aside copy
+    dropped. At every instant a full copy of the old or the new data
+    exists on disk (``write.mode('overwrite')`` deletes the only copy
+    before the job that replaces it, and a failed job leaves nothing).
+    If ``write`` raises, staging is removed and ``path`` is untouched.
+    A crash between the two renames is healed by the next call, and
+    :func:`committed_dir` finds the aside copy meanwhile.
+
+    Driver-local filesystems only: ``os.rename`` is not an object-store
+    operation; on S3/GCS use a transactional table format instead."""
+    path = path.rstrip("/")
+    staging, prev = path + ".staging", path + ".prev"
+    # died between rename(path→prev) and rename(staging→path): restore
+    if not os.path.exists(path) and os.path.exists(prev):
+        os.rename(prev, path)
+    # a .prev next to a live path is a finished swap's leftover, a
+    # staging directory an interrupted write's
+    for leftover in (prev, staging):
+        if os.path.exists(leftover):
+            shutil.rmtree(leftover)
+    try:
+        write(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    if os.path.exists(path):
+        os.rename(path, prev)
+    os.rename(staging, path)
+    if os.path.exists(prev):
+        shutil.rmtree(prev)
+
+
+def committed_dir(path: str) -> str | None:
+    """The last copy :func:`commit_dir` committed at ``path``: the live
+    directory, else the aside copy an interrupted swap left, else None."""
+    path = path.rstrip("/")
+    for d in (path, path + ".prev"):
+        if os.path.exists(d):
+            return d
+    return None
+
+
 def write_with_quality_gate(
     df: DataFrame,
     path: str,
@@ -71,49 +123,26 @@ def write_with_quality_gate(
     observed metrics dict on success. At 100 TB this is how a load step
     self-certifies without doubling its I/O.
 
-    The write lands in a STAGING directory and is promoted to ``path``
-    only after every predicate passes — a failed gate never leaves
-    rejected data where downstream consumers read.
-
-    Promotion uses the same crash-safe swap as ``streaming.cdc``: rename
-    the live copy aside, rename staging live, then drop the aside — at
-    every instant a full copy of the old or new data exists on disk
-    (plain rmtree-then-rename has a window where a crash destroys the
-    only copy). Driver-local filesystems only: ``os.rename`` is not an
-    object-store operation; on S3/GCS use a transactional table format
-    instead."""
-    import os
-    import shutil
-
+    The gate runs inside :func:`commit_dir`'s write, so a failed gate
+    never leaves rejected data where downstream consumers read."""
     from pyspark.sql import Observation
 
-    staging = path.rstrip("/") + ".staging"
-    prev = path.rstrip("/") + ".prev"
-    # crash recovery from an earlier interrupted promotion: died between
-    # rename(path→prev) and rename(staging→path) → restore the aside;
-    # a stale .prev next to a live path is a finished swap's leftover
-    if not os.path.exists(path) and os.path.exists(prev):
-        os.rename(prev, path)
-    if os.path.exists(prev):
-        shutil.rmtree(prev)
     obs = Observation("quality_gate")
     aggs = [col.alias(name) for name, (col, _) in expectations.items()]
-    df.observe(obs, *aggs).write.mode(mode).parquet(staging)
-    got = obs.get
-    failures = {
-        name: got[name]
-        for name, (_, predicate) in expectations.items()
-        if not predicate(got[name])
-    }
-    if failures:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise ConstraintViolation(f"quality gate failed: {failures}")
-    if os.path.exists(path):
-        os.rename(path, prev)
-    os.rename(staging, path)
-    if os.path.exists(prev):
-        shutil.rmtree(prev)
-    return got
+
+    def write(staging: str) -> None:
+        df.observe(obs, *aggs).write.mode(mode).parquet(staging)
+        got = obs.get
+        failures = {
+            name: got[name]
+            for name, (_, predicate) in expectations.items()
+            if not predicate(got[name])
+        }
+        if failures:
+            raise ConstraintViolation(f"quality gate failed: {failures}")
+
+    commit_dir(path, write)
+    return obs.get
 
 
 def write_parquet(
@@ -244,7 +273,7 @@ def compact_small_files(
     compaction), otherwise a repartition rebalances. Returns the
     planned file count. On table formats (Delta/Iceberg) this is OPTIMIZE;
     here it is the plain-directory form with an atomic overwrite of
-    ``dst_dir``."""
+    ``dst_dir`` (:func:`commit_dir`)."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     path = jvm.org.apache.hadoop.fs.Path(src_dir)
@@ -254,5 +283,5 @@ def compact_small_files(
     df = spark.read.format(fmt).load(src_dir)
     current = df.rdd.getNumPartitions()
     sized = df.coalesce(n_files) if n_files < current else df.repartition(n_files)
-    sized.write.mode("overwrite").format(fmt).save(dst_dir)
+    commit_dir(dst_dir, sized.write.format(fmt).save)
     return n_files

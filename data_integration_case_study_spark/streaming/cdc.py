@@ -3,22 +3,21 @@ snapshot, one micro-batch at a time.
 
 This is the lake-format-agnostic MERGE INTO loop: each micro-batch is
 applied with :func:`~data_integration_case_study_spark.operators.merge.
-merge_upsert` (last-wins by version) and the snapshot is atomically
-swapped via write-to-tmp + rename. On a transactional table format
-(Delta/Iceberg/Hudi) the swap becomes the format's own MERGE commit and
-this function shrinks to one line — the dataflow (stream → keyed merge →
-snapshot) is identical, which is the point of demonstrating it without
-the format dependency.
+merge_upsert` (last-wins by version) and the new snapshot is committed
+through :func:`~data_integration_case_study_spark.streaming.state.
+drain_into` (stage, then swap; replayed batches skipped). On a
+transactional table format (Delta/Iceberg/Hudi) the commit becomes the
+format's own MERGE commit and this function shrinks to one line — the
+dataflow (stream → keyed merge → snapshot) is identical, which is the
+point of demonstrating it without the format dependency.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import SparkSession
 
 from data_integration_case_study_spark.operators.merge import merge_upsert
+from data_integration_case_study_spark.streaming.state import drain_into
 
 
 def run_streaming_merge(
@@ -35,44 +34,12 @@ def run_streaming_merge(
     everything pending, then stop — the restartable batch-of-streams
     deployment shape)."""
 
-    # Restart semantics: after a crash, foreachBatch may REPLAY the last
-    # un-committed micro-batch. merge_upsert makes the replay a no-op —
-    # re-applying the same (key, version) rows cannot change the max-version
-    # winner — so the sink is effectively idempotent without a txn log,
-    # PROVIDED the snapshot itself survives every crash point. The swap
-    # below never deletes the only copy: write tmp → rename live aside →
-    # rename tmp live → drop the old copy; a crash between the two renames
-    # is healed by the recovery block (restore the aside copy).
-    tmp = target_dir + ".tmp"
-    prev = target_dir + ".prev"
-
-    def apply_batch(batch_df, batch_id):
-        sess = batch_df.sparkSession
-        # crash recovery: died between rename(target→prev) and
-        # rename(tmp→target) → restore the aside snapshot; a stale .prev
-        # alongside a live target is just the last swap's leftover
-        if not os.path.exists(target_dir) and os.path.exists(prev):
-            os.rename(prev, target_dir)
-        if os.path.exists(prev):
-            shutil.rmtree(prev)
-        if os.path.exists(target_dir):
-            target = sess.read.parquet(target_dir)
-        else:
+    def update(batch_df, prev_dir, out_dir):
+        if prev_dir is None:
             target = batch_df.limit(0)
-        merged = merge_upsert(target, batch_df, keys, version_col)
-        # materialize the merge into tmp BEFORE touching the live snapshot
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(target_dir):
-            os.rename(target_dir, prev)
-        os.rename(tmp, target_dir)
-        if os.path.exists(prev):
-            shutil.rmtree(prev)
+        else:
+            target = batch_df.sparkSession.read.parquet(prev_dir)
+        merge_upsert(target, batch_df, keys, version_col).write.parquet(out_dir)
 
-    return (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = spark.readStream.schema(schema).parquet(source_dir)
+    return drain_into(stream, target_dir, checkpoint_dir, update)

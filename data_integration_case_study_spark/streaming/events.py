@@ -109,17 +109,20 @@ def run_streaming_foreach_batch(
     checkpoint_dir: str,
     gap_watermark: str = "1 day",
 ):
-    """Production-shaped runner: transform each micro-batch and overwrite
+    """Production-shaped runner: transform each micro-batch and replace
     the parquet sink via foreachBatch (the standard pattern for sinks
-    Structured Streaming doesn't support in complete mode). availableNow
-    drains the source then stops."""
+    Structured Streaming doesn't support in complete mode), committed by
+    ``sources.sinks.commit_dir`` so a failed batch keeps the previous
+    output. availableNow drains the source then stops."""
+    from data_integration_case_study_spark.sources.sinks import commit_dir
+
     stream = (
         spark.readStream.schema(schema).parquet(source_dir).withWatermark("ts", gap_watermark)
     )
     out = transform(stream)
 
     def sink(batch_df, batch_id):
-        batch_df.write.mode("overwrite").parquet(sink_dir)
+        commit_dir(sink_dir, batch_df.write.parquet)
 
     return (
         out.writeStream.foreachBatch(sink)

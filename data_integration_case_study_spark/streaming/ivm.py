@@ -12,21 +12,19 @@ accumulated table — the whole point of IVM at 100 TB.
 Consistency is the hard part a naive two-table sink gets wrong: if the
 snapshot commits but the aggregate doesn't (crash between writes), a
 replayed batch diffs against the ALREADY-UPDATED snapshot, produces a
-zero delta, and the aggregate silently loses the batch forever. The fix
-here is versioned-directory commits: each micro-batch writes snapshot +
-aggregate into a fresh ``v{batch_id}/`` directory and drops a
-``_COMMIT`` marker last; readers resolve the highest COMMITTED version,
-so the pair is atomic — either both tables advanced or neither did, and
-a replay either skips (marker present) or recomputes against the old
-consistent pair. On a transactional lake format the version directory
-becomes the format's own multi-table commit.
+zero delta, and the aggregate silently loses the batch forever. Here
+both tables live in ONE state directory committed by
+:func:`~data_integration_case_study_spark.streaming.state.drain_into`
+(stage both, then one rename swap), so the pair is atomic — either both
+advanced or neither did — and a replay either skips (the commit's
+batch-id marker covers it) or recomputes against the old consistent
+pair. On a transactional lake format the swap becomes the format's own
+multi-table commit.
 """
 
 from __future__ import annotations
 
 import os
-import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,34 +32,21 @@ from pyspark.sql import functions as F
 from data_integration_case_study_spark.operators.merge import (
     merge_apply_changes,
 )
-
-_VDIR = re.compile(r"^v(\d+)$")
-
-
-def _latest_committed(state_dir: str) -> int | None:
-    if not os.path.isdir(state_dir):
-        return None
-    versions = [
-        int(m.group(1))
-        for name in os.listdir(state_dir)
-        if (m := _VDIR.match(name))
-        and os.path.exists(os.path.join(state_dir, name, "_COMMIT"))
-    ]
-    return max(versions) if versions else None
+from data_integration_case_study_spark.sources.sinks import committed_dir
+from data_integration_case_study_spark.streaming.state import drain_into
 
 
 def read_ivm_state(
     spark: SparkSession, state_dir: str
 ) -> tuple[DataFrame | None, DataFrame | None]:
-    """(snapshot, aggregate) of the latest committed version, or
+    """(snapshot, aggregate) of the last committed batch, or
     (None, None) before the first commit."""
-    v = _latest_committed(state_dir)
-    if v is None:
+    d = committed_dir(state_dir)
+    if d is None:
         return None, None
-    base = os.path.join(state_dir, f"v{v}")
     return (
-        spark.read.parquet(os.path.join(base, "snapshot")),
-        spark.read.parquet(os.path.join(base, "agg")),
+        spark.read.parquet(os.path.join(d, "snapshot")),
+        spark.read.parquet(os.path.join(d, "agg")),
     )
 
 
@@ -76,7 +61,6 @@ def run_streaming_ivm(
     checkpoint_dir: str,
     version_col: str = "version",
     op_col: str = "op",
-    keep_versions: int = 2,
 ):
     """Drain ``source_dir`` as a CDC stream and transactionally maintain
     snapshot + (group -> n_rows, value_sum) aggregate under
@@ -84,18 +68,14 @@ def run_streaming_ivm(
     DECIMAL(38,8) so +x and −x cancel bit-for-bit — the maintained
     aggregate EQUALS the recompute, not approximately."""
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def update(batch_df: DataFrame, prev_dir, out_dir: str) -> None:
         sess = batch_df.sparkSession
-        latest = _latest_committed(state_dir)
-        if latest is not None and latest >= batch_id:
-            return  # checkpoint replay of a fully committed batch
-        if latest is None:
+        if prev_dir is None:
             prev_snap = batch_df.limit(0).drop(op_col)
             prev_agg = None
         else:
-            base = os.path.join(state_dir, f"v{latest}")
-            prev_snap = sess.read.parquet(os.path.join(base, "snapshot"))
-            prev_agg = sess.read.parquet(os.path.join(base, "agg"))
+            prev_snap = sess.read.parquet(os.path.join(prev_dir, "snapshot"))
+            prev_agg = sess.read.parquet(os.path.join(prev_dir, "agg"))
 
         # the snapshot RETAINS the winning version per key (it is the
         # merge target's own column), so a micro-batch delivering an
@@ -155,25 +135,12 @@ def run_streaming_ivm(
             )
         folded = folded.filter(F.col("n_rows") > 0)
 
-        vdir = os.path.join(state_dir, f"v{batch_id}")
-        if os.path.exists(vdir):  # half-written leftover from a crash
-            shutil.rmtree(vdir)
-        new_snap.write.parquet(os.path.join(vdir, "snapshot"))
-        folded.write.parquet(os.path.join(vdir, "agg"))
-        # the marker write IS the commit point for the snapshot+agg pair
-        with open(os.path.join(vdir, "_COMMIT"), "w") as f:
-            f.write(str(batch_id))
-        for name in os.listdir(state_dir):
-            m = _VDIR.match(name)
-            if m and int(m.group(1)) <= batch_id - keep_versions:
-                shutil.rmtree(os.path.join(state_dir, name))
+        new_snap.write.parquet(os.path.join(out_dir, "snapshot"))
+        folded.write.parquet(os.path.join(out_dir, "agg"))
 
-    return (
+    stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(source_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
+    return drain_into(stream, state_dir, checkpoint_dir, update)

@@ -2,36 +2,47 @@
 
 A continuously-ingesting pipeline wants "distinct users per event type,
 so far" without keeping every user id in streaming state. Because the
-KMV sketch MERGES (union -> re-rank -> cut, operators/sketches), the
-maintenance loop is a plain foreachBatch compaction: sketch the incoming
-microbatch, merge it with the persisted sketch table, overwrite. State
-on disk and in memory is <= k rows per group forever; the merged sketch
-equals the sketch of all data seen (the merge property, proven in
+sketches MERGE (KMV: union -> re-rank -> cut; count-min, AMS and
+histogram counters add; HLL registers take the max; the weighted
+reservoir re-cuts a top-k, operators/sketches), every maintenance loop
+here is the same fold: sketch the incoming microbatch, merge it with
+the persisted sketch table, write the result as the new state. State
+on disk is bounded per group forever; the merged sketch equals the
+sketch of all data seen (the merge property, proven in
 tests/test_warehouse.py and re-proven stream-vs-batch in
 tests/test_streaming.py).
 
-The same foreachBatch-merge shape maintains any mergeable summary here
-(count-min grids add counter-wise; moment profiles add the six sums) —
-KMV is the demonstrated instance because its merge is the least obvious.
+The fold runs on :func:`~data_integration_case_study_spark.streaming.
+state.drain_into`: the merge reads the committed state and writes a
+fresh directory, which is then committed by a stage-then-swap rename,
+so a failed batch leaves the previous sketch readable. The commit
+carries the applied batch id, so a checkpoint replay is skipped — the
+additive merges (count-min, AMS, histogram) would double-count it, and
+the idempotent ones (KMV, HLL, reservoir) need no special case.
 """
 
 from __future__ import annotations
 
-from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame
 
 from data_integration_case_study_spark.operators.sketches import (
     kmv_merge_sketches,
     kmv_sketch_rows,
 )
+from data_integration_case_study_spark.streaming.state import drain_into
 
-def _is_path_not_found(e: AnalysisException) -> bool:
-    """True only for the state-not-yet-written case; any other analysis
-    failure (corrupt footer, transient FS error surfaced as 'unable to
-    infer schema', permissions) must PROPAGATE — silently resetting
-    accumulated sketch state would be data loss."""
-    cls = e.getErrorClass() or ""
-    return "PATH_NOT_FOUND" in cls or "PATH_NOT_FOUND" in str(e)
+
+def _fold(stream: DataFrame, state_path: str, checkpoint_dir: str, sketch, merge):
+    """Maintain ``sketch(batch)`` merged into the state at ``state_path``
+    with ``merge(prev_state, batch_sketch)``; returns the started query."""
+
+    def update(batch_df: DataFrame, prev_dir, out_dir: str) -> None:
+        state = sketch(batch_df)
+        if prev_dir is not None:
+            state = merge(batch_df.sparkSession.read.parquet(prev_dir), state)
+        state.write.parquet(out_dir)
+
+    return drain_into(stream, state_path, checkpoint_dir, update)
 
 
 def streaming_kmv_sketch(
@@ -44,37 +55,11 @@ def streaming_kmv_sketch(
 ):
     """Maintain a KMV sketch table at ``state_path`` from a streaming
     frame. Each microbatch: sketch the batch, merge with the persisted
-    state, atomically overwrite. Returns the started query (caller
-    awaits/stops). Exactly-once note: overwrite-per-batch is idempotent
-    for replayed batches (merging the same rows twice is a no-op by the
-    dedup in the merge), so checkpoint-replay after failure converges to
-    the same state."""
-    spark = stream.sparkSession
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        batch_sketch = kmv_sketch_rows(batch_df, group_cols, value_col, k)
-        try:
-            prev = spark.read.parquet(state_path)
-            merged = kmv_merge_sketches(prev, batch_sketch, group_cols, k)
-        except AnalysisException as e:
-            if not _is_path_not_found(e):
-                raise
-            merged = batch_sketch
-        # Materialize before overwriting the path being read. The
-        # collect is BOUNDED by construction (<= k rows per group — the
-        # whole point of the sketch); a deployment with millions of
-        # groups writes to a versioned path and swaps a pointer instead
-        # (or uses a table format whose commit is the swap).
-        rows = merged.collect()
-        spark.createDataFrame(rows, merged.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    state, commit. Returns the started query (caller awaits/stops)."""
+    return _fold(
+        stream, state_path, checkpoint_dir,
+        lambda b: kmv_sketch_rows(b, group_cols, value_col, k),
+        lambda prev, new: kmv_merge_sketches(prev, new, group_cols, k),
     )
 
 
@@ -89,54 +74,18 @@ def streaming_cms_sketch(
 ):
     """Maintain a count-min frequency grid at ``state_path`` from a
     streaming frame: sketch each microbatch, ADD it counter-wise into
-    the persisted grid, atomically overwrite. State is <= depth*width
-    counter rows forever.
-
-    Exactly-once: counter addition is NOT idempotent (replaying a batch
-    would double-count), so the state carries the last applied batch id
-    and a replayed microbatch is skipped — the standard transactional
-    foreachBatch guard, needed here precisely because this merge, unlike
-    KMV's, is not a set union."""
-    from pyspark.sql import functions as F
-
+    the persisted grid, commit. State is <= depth*width counter rows
+    forever. Counter addition is not idempotent; the commit's batch-id
+    marker is what keeps a checkpoint replay from double-counting."""
     from data_integration_case_study_spark.operators.sketches import (
         cms_build,
         cms_merge,
     )
 
-    spark = stream.sparkSession
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            prev = spark.read.parquet(state_path)
-        except AnalysisException as e:
-            # state not yet written -> first batch; any other failure
-            # propagates (resetting counters on a transient IO error
-            # would both lose counts and wipe the replay guard)
-            if not _is_path_not_found(e):
-                raise
-            prev = None
-        if prev is None:
-            merged = cms_build(batch_df, key_col, depth, width, seed)
-        else:
-            applied = prev.agg(F.max("batch_id")).collect()[0][0]
-            if applied is not None and applied >= batch_id:
-                return  # replay after checkpoint recovery: already applied
-            merged = cms_merge(
-                prev.select("row", "col", "cnt"),
-                cms_build(batch_df, key_col, depth, width, seed),
-            )
-        out = merged.withColumn("batch_id", F.lit(batch_id))
-        rows = out.collect()  # bounded: <= depth*width rows by construction
-        spark.createDataFrame(rows, out.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold(
+        stream, state_path, checkpoint_dir,
+        lambda b: cms_build(b, key_col, depth, width, seed),
+        cms_merge,
     )
 
 
@@ -149,37 +98,18 @@ def streaming_hll_sketch(
     p: int = 8,
 ):
     """Maintain a HyperLogLog register table at ``state_path`` from a
-    streaming frame — the third streaming sketch next to KMV and CMS,
-    and the best-behaved one: the merge is an element-wise MAX, which
-    is idempotent (replayed microbatches are no-ops, like KMV's
-    re-rank and unlike CMS's additive merge, which needs the batch-id
-    guard). State: <= 2^p rows per group forever."""
+    streaming frame — the third streaming sketch next to KMV and CMS:
+    the merge is an element-wise MAX. State: <= 2^p rows per group
+    forever."""
     from data_integration_case_study_spark.operators.sketches import (
         hll_merge_registers,
         hll_register_rows,
     )
 
-    spark = stream.sparkSession
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        batch_regs = hll_register_rows(batch_df, group_cols, value_col, p)
-        try:
-            prev = spark.read.parquet(state_path)
-            merged = hll_merge_registers(prev, batch_regs, group_cols)
-        except AnalysisException as e:
-            if not _is_path_not_found(e):
-                raise
-            merged = batch_regs
-        rows = merged.collect()
-        spark.createDataFrame(rows, merged.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold(
+        stream, state_path, checkpoint_dir,
+        lambda b: hll_register_rows(b, group_cols, value_col, p),
+        lambda prev, new: hll_merge_registers(prev, new, group_cols),
     )
 
 
@@ -194,47 +124,17 @@ def streaming_ams_sketch(
 ):
     """Maintain per-group AMS F2 counters at ``state_path`` from a
     streaming frame — the fourth streaming sketch: like count-min the
-    merge is ADDITIVE (sign sums add across batches), so a replayed
-    microbatch would double-count and the state carries the last
-    applied batch id as the transactional guard. State: one wide row
-    per group (d counters + n_rows) forever."""
-    from pyspark.sql import functions as F
-
+    merge is ADDITIVE (sign sums add across batches). State: one wide
+    row per group (d counters + n_rows) forever."""
     from data_integration_case_study_spark.operators.sketches import (
         ams_counters,
         ams_merge,
     )
 
-    spark = stream.sparkSession
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            prev = spark.read.parquet(state_path)
-        except AnalysisException as e:
-            if not _is_path_not_found(e):
-                raise
-            prev = None
-        batch_sketch = ams_counters(batch_df, group_cols, value_col, d, seed)
-        if prev is None:
-            merged = batch_sketch
-        else:
-            applied = prev.agg(F.max("batch_id")).collect()[0][0]
-            if applied is not None and applied >= batch_id:
-                return  # replay after checkpoint recovery: already applied
-            merged = ams_merge(
-                prev.drop("batch_id"), batch_sketch, group_cols, d
-            )
-        out = merged.withColumn("batch_id", F.lit(batch_id))
-        rows = out.collect()  # bounded: one row per group by construction
-        spark.createDataFrame(rows, out.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold(
+        stream, state_path, checkpoint_dir,
+        lambda b: ams_counters(b, group_cols, value_col, d, seed),
+        lambda prev, new: ams_merge(prev, new, group_cols, d),
     )
 
 
@@ -255,18 +155,11 @@ def streaming_weighted_reservoir(
     is the same foreachBatch compaction as the KMV sketch: key the
     microbatch, union with the persisted reservoir, keep the k largest.
 
-    Replay-idempotent WITHOUT a batch-id guard: keys are pure functions
-    of row content, so re-merging an already-applied batch re-derives
-    identical keys and the re-cut is a no-op (same argument as the KMV
-    and HLL merges; the additive AMS/CMS grids are the ones that need
-    the guard). State on disk: <= k rows forever. The streamed
-    reservoir equals the batch sample of all data seen — asserted
-    stream-vs-batch in tests."""
+    State on disk: <= k rows forever. The streamed reservoir equals the
+    batch sample of all data seen — asserted stream-vs-batch in tests."""
     from pyspark.sql import functions as F
 
     from data_integration_case_study_spark.functions.text import hash60
-
-    spark = stream.sparkSession
 
     def keyed(df: DataFrame) -> DataFrame:
         h = hash60(F.col(id_col).cast("string"))
@@ -283,25 +176,10 @@ def streaming_weighted_reservoir(
     def cut(df: DataFrame) -> DataFrame:
         return df.orderBy(F.desc("key_scaled"), F.asc("id")).limit(k)
 
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        batch_keys = cut(keyed(batch_df))
-        try:
-            prev = spark.read.parquet(state_path)
-            merged = cut(prev.unionByName(batch_keys).distinct())
-        except AnalysisException as e:
-            if not _is_path_not_found(e):
-                raise
-            merged = batch_keys
-        rows = merged.collect()  # bounded: <= k rows by construction
-        spark.createDataFrame(rows, merged.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold(
+        stream, state_path, checkpoint_dir,
+        lambda b: cut(keyed(b)),
+        lambda prev, new: cut(prev.unionByName(new).distinct()),
     )
 
 
@@ -320,47 +198,15 @@ def streaming_histogram_sketch(
     streaming sketch: the persisted counters answer p50/p95/p99 at any
     moment via ``operators/sketches.histogram_estimate`` without ever
     sorting or retaining raw values. Like count-min and AMS the merge
-    is ADDITIVE (bin counters sum across batches), so a replayed
-    microbatch would double-count and the state carries the last
-    applied batch id as the transactional guard. State: <= bins rows
+    is ADDITIVE (bin counters sum across batches). State: <= bins rows
     per group forever."""
-    from pyspark.sql import functions as F
-
     from data_integration_case_study_spark.operators.sketches import (
         histogram_bin_counts,
         histogram_merge,
     )
 
-    spark = stream.sparkSession
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            prev = spark.read.parquet(state_path)
-        except AnalysisException as e:
-            if not _is_path_not_found(e):
-                raise
-            prev = None
-        batch_counts = histogram_bin_counts(
-            batch_df, group_cols, value_col, lo, hi, bins
-        )
-        if prev is None:
-            merged = batch_counts
-        else:
-            applied = prev.agg(F.max("batch_id")).collect()[0][0]
-            if applied is not None and applied >= batch_id:
-                return  # replay after checkpoint recovery: already applied
-            merged = histogram_merge(
-                prev.drop("batch_id"), batch_counts, group_cols
-            )
-        out = merged.withColumn("batch_id", F.lit(batch_id))
-        rows = out.collect()  # bounded: <= bins rows per group
-        spark.createDataFrame(rows, out.schema).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _fold(
+        stream, state_path, checkpoint_dir,
+        lambda b: histogram_bin_counts(b, group_cols, value_col, lo, hi, bins),
+        lambda prev, new: histogram_merge(prev, new, group_cols),
     )

@@ -31,9 +31,3 @@ def test_engine_cache_registry_releases_tracked_persists(spark, sf_dir):
     # double release is a safe no-op
     assert cache.release_tracked() == 0
     mine.unpersist(True)
-    # opt-out path builds a persist-free plan
-    pf = dedup.minhash_candidate_pairs(
-        d, "doc_id", "text", persist_summary=False
-    )
-    pf.count()
-    assert cache.release_tracked() == 0

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
@@ -55,6 +56,8 @@ def test_write_with_quality_gate(spark, sf_dir):
         sinks.write_with_quality_gate(
             df, d, {"impossible": (F.count(F.lit(1)), lambda n: n < 0)}
         )
+    # the rejected write never reached the path: the last good load stays
+    assert spark.read.parquet(d).count() == df.count()
 
 
 def test_jdbc_roundtrip_with_pk_constraints(spark, sf_dir):
@@ -121,3 +124,51 @@ def test_compact_small_files_reduces_count_preserves_rows(spark, tmp_path):
     a = sorted(tuple(r) for r in spark.read.parquet(src).collect())
     b = sorted(tuple(r) for r in spark.read.parquet(dst).collect())
     assert a == b
+
+
+def test_commit_dir_recovers_interrupted_swap(spark, tmp_path):
+    """A crash between rename(live→.prev) and rename(staging→live)
+    leaves only the aside copy: readers find it, and the next commit
+    restores it before its write runs."""
+    path = str(tmp_path / "t")
+    spark.range(5).write.parquet(path + ".prev")
+    assert sinks.committed_dir(path) == path + ".prev"
+
+    seen = []
+
+    def write(staging):
+        seen.append(spark.read.parquet(path).count())
+        spark.range(7).write.parquet(staging)
+
+    sinks.commit_dir(path, write)
+    assert seen == [5]
+    assert spark.read.parquet(path).count() == 7
+    assert sinks.committed_dir(path) == path
+    assert not os.path.exists(path + ".prev")
+
+
+def test_commit_dir_replaces_leftover_staging(spark, tmp_path):
+    """A staging directory left by an interrupted write is not state:
+    readers ignore it and the next commit starts from scratch."""
+    path = str(tmp_path / "t")
+    spark.range(5).write.parquet(path)
+    spark.range(100).write.parquet(path + ".staging")
+    assert sinks.committed_dir(path) == path
+    # the default errorifexists write proves staging was cleared first
+    sinks.commit_dir(path, lambda d: spark.range(3).write.parquet(d))
+    assert spark.read.parquet(path).count() == 3
+    assert not os.path.exists(path + ".staging")
+
+
+def test_commit_dir_failed_write_keeps_previous(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(5).write.parquet(path)
+
+    def write(staging):
+        spark.range(3).write.parquet(staging)
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        sinks.commit_dir(path, write)
+    assert spark.read.parquet(path).count() == 5
+    assert not os.path.exists(path + ".staging")

@@ -6,6 +6,7 @@ from __future__ import annotations
 import tempfile
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -352,8 +353,7 @@ def test_streaming_kmv_sketch_matches_batch(spark, normalized_events_dir, tmp_pa
 
 def test_streaming_cms_sketch_matches_batch(spark, normalized_events_dir, tmp_path):
     """Streaming count-min maintenance: counter-wise merge per
-    microbatch (with the batch-id replay guard) converges to the batch
-    sketch of all data."""
+    microbatch converges to the batch sketch of all data."""
     from data_integration_case_study_spark.operators.sketches import cms_build
     from data_integration_case_study_spark.streaming.sketches import (
         streaming_cms_sketch,
@@ -477,7 +477,7 @@ def test_streaming_hll_sketch_matches_batch(spark, normalized_events_dir):
 
 def test_streaming_ams_sketch_matches_batch(spark, normalized_events_dir):
     """Streaming AMS maintenance: additive counter merge per microbatch
-    (batch-id replay guard) converges to the batch sketch of all data."""
+    converges to the batch sketch of all data."""
     from data_integration_case_study_spark.operators.sketches import (
         ams_counters,
     )
@@ -505,7 +505,7 @@ def test_streaming_ams_sketch_matches_batch(spark, normalized_events_dir):
 
 def test_streaming_ivm_matches_batch_recompute(spark, sf_dir, tmp_path):
     """Streaming IVM: snapshot + aggregate maintained transactionally
-    per micro-batch (versioned-directory commits) converge to the
+    per micro-batch (one committed state directory) converge to the
     batch CDC apply + from-scratch aggregate."""
     from data_integration_case_study_spark.operators.merge import (
         merge_apply_changes,
@@ -548,7 +548,7 @@ def test_streaming_ivm_matches_batch_recompute(spark, sf_dir, tmp_path):
     assert _canon(agg) == _canon(want_agg)
 
     # a restart over the same checkpoint replays nothing and changes
-    # nothing (the _COMMIT guard)
+    # nothing
     q2 = run_streaming_ivm(
         spark, src, schema, state,
         keys=["o_orderkey"], group_col="o_orderstatus",
@@ -561,10 +561,9 @@ def test_streaming_ivm_matches_batch_recompute(spark, sf_dir, tmp_path):
     assert _canon(agg2) == _canon(agg)
 
 
-def test_streaming_ivm_ignores_uncommitted_state(spark, sf_dir, tmp_path):
-    """A half-written version directory (no _COMMIT marker — the crash
-    window) must be invisible to readers and harmlessly replaced on
-    replay."""
+def test_streaming_ivm_replaces_leftover_staging(spark, sf_dir, tmp_path):
+    """A staging directory left by a crash mid-write is invisible to
+    readers and replaced by the next commit."""
     import os
 
     from data_integration_case_study_spark.plans.warehouse_queries import (
@@ -580,11 +579,10 @@ def test_streaming_ivm_ignores_uncommitted_state(spark, sf_dir, tmp_path):
     log.coalesce(1).write.parquet(src)
     schema = spark.read.parquet(src).schema
     state = str(tmp_path / "state")
-    # plant a HALF-WRITTEN v0 (data, no marker): simulates a crash after
-    # the writes but before the commit point
-    os.makedirs(os.path.join(state, "v0", "snapshot"), exist_ok=True)
-    log.limit(3).drop("op").write.mode("overwrite").parquet(
-        os.path.join(state, "v0", "snapshot")
+    # plant a HALF-WRITTEN staging pair: a crash after the snapshot write,
+    # before the aggregate and the swap
+    log.limit(3).drop("op").write.parquet(
+        os.path.join(state + ".staging", "snapshot")
     )
     assert read_ivm_state(spark, state) == (None, None)
 
@@ -596,10 +594,155 @@ def test_streaming_ivm_ignores_uncommitted_state(spark, sf_dir, tmp_path):
     )
     q.awaitTermination(120)
     snap, agg = read_ivm_state(spark, state)
-    # the replayed batch rebuilt v0 from scratch: full v1 row count, not
-    # the planted 3-row leftover
+    # the batch was built from scratch: full row count, not the planted
+    # 3-row leftover
     assert snap.count() == log.count()
     assert agg.agg(F.sum("n_rows")).collect()[0][0] == log.count()
+    assert not os.path.exists(state + ".staging")
+
+
+# --- the commit protocol under the stateful loops ---------------------------
+
+TINY_SCHEMA = "event_id long, event_type string, user_id long, value double, uid string, w double"
+
+
+def _tiny_file(spark, src, lo, hi):
+    """Append one parquet file of rows lo..hi-1 to ``src``: one file is
+    one micro-batch under maxFilesPerTrigger=1."""
+    spark.createDataFrame(
+        [
+            (i, "abc"[i % 3], i, i * 2.5, str(i), float(i % 5 + 1))
+            for i in range(lo, hi)
+        ],
+        TINY_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(src)
+
+
+def _drain(spark, start, src, state, ckpt):
+    """Run one availableNow drain of ``src``; a failed batch raises
+    StreamingQueryException."""
+    stream = (
+        spark.readStream.schema(TINY_SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    start(stream, str(state), str(ckpt)).awaitTermination(180)
+
+
+def _sketch_loops():
+    from data_integration_case_study_spark.streaming import sketches as sk
+
+    return {
+        "kmv": lambda s, st, ck: sk.streaming_kmv_sketch(
+            s, ["event_type"], "user_id", st, ck, k=4),
+        "cms": lambda s, st, ck: sk.streaming_cms_sketch(
+            s, "user_id", st, ck, depth=4, width=64),
+        "hll": lambda s, st, ck: sk.streaming_hll_sketch(
+            s, ["event_type"], "uid", st, ck),
+        "ams": lambda s, st, ck: sk.streaming_ams_sketch(
+            s, ["event_type"], "user_id", st, ck),
+        "reservoir": lambda s, st, ck: sk.streaming_weighted_reservoir(
+            s, "event_id", "w", st, ck, k=5),
+        "histogram": lambda s, st, ck: sk.streaming_histogram_sketch(
+            s, ["event_type"], "value", st, ck, lo=0.0, hi=100.0, bins=8),
+    }
+
+
+@pytest.mark.parametrize(
+    "loop", ["kmv", "cms", "hll", "ams", "reservoir", "histogram"]
+)
+def test_streaming_sketch_failed_write_keeps_state(spark, tmp_path, loop):
+    """A micro-batch whose state write fails must leave the previous
+    sketch readable, and the next run applies that batch. The fault: a
+    parquet codec whose class is missing fails the write job's tasks
+    after an overwrite would already have emptied the directory."""
+    start = _sketch_loops()[loop]
+    src, state, ckpt = tmp_path / "src", tmp_path / "state", tmp_path / "ckpt"
+    _tiny_file(spark, str(src), 0, 20)
+    _drain(spark, start, src, state, ckpt)
+    before = _canon(spark.read.parquet(str(state)))
+
+    _tiny_file(spark, str(src), 20, 40)
+    spark.conf.set("spark.sql.parquet.compression.codec", "brotli")
+    try:
+        with pytest.raises(StreamingQueryException, match="BrotliCodec"):
+            _drain(spark, start, src, state, ckpt)
+    finally:
+        spark.conf.unset("spark.sql.parquet.compression.codec")
+    assert _canon(spark.read.parquet(str(state))) == before
+
+    _drain(spark, start, src, state, ckpt)
+    # an uninterrupted drain of the same two files, for reference
+    _drain(spark, start, src, tmp_path / "ref_state", tmp_path / "ref_ckpt")
+    got = _canon(spark.read.parquet(str(state)))
+    assert got != before
+    assert got == _canon(spark.read.parquet(str(tmp_path / "ref_state")))
+
+
+def _cms_grid(spark, path):
+    from data_integration_case_study_spark.operators.sketches import cms_build
+
+    return _canon(cms_build(spark.read.parquet(str(path)), "user_id", 4, 64))
+
+
+def test_streaming_cms_restart_does_not_double_count(spark, tmp_path):
+    """A crash after the state commit but before Spark's own batch commit
+    makes the restart replay that batch; the additive grid must not
+    count it twice."""
+    import os
+
+    start = _sketch_loops()["cms"]
+    src, state, ckpt = tmp_path / "src", tmp_path / "state", tmp_path / "ckpt"
+    _tiny_file(spark, str(src), 0, 20)
+    _tiny_file(spark, str(src), 20, 40)
+    _drain(spark, start, src, state, ckpt)
+    want = _cms_grid(spark, src)
+    assert _canon(spark.read.parquet(str(state))) == want
+
+    last = ckpt / "commits" / "1"
+    os.remove(last)
+    os.remove(ckpt / "commits" / ".1.crc")
+    _drain(spark, start, src, state, ckpt)
+    assert last.exists()  # batch 1 really ran again
+    assert _canon(spark.read.parquet(str(state))) == want
+
+
+def test_streaming_new_checkpoint_over_existing_state_applies(spark, tmp_path):
+    """State carried over to a new checkpoint (a new source, a reset
+    query) folds in every batch of that checkpoint, even though its
+    batch ids restart at 0."""
+    start = _sketch_loops()["cms"]
+    src_a, src_b, state = tmp_path / "a", tmp_path / "b", tmp_path / "state"
+    _tiny_file(spark, str(src_a), 0, 20)
+    _tiny_file(spark, str(src_a), 20, 40)
+    _tiny_file(spark, str(src_b), 40, 60)
+    _drain(spark, start, src_a, state, tmp_path / "ckpt_a")
+    _drain(spark, start, src_b, state, tmp_path / "ckpt_b")
+    all_rows = spark.read.parquet(str(src_a)).unionByName(
+        spark.read.parquet(str(src_b))
+    )
+    from data_integration_case_study_spark.operators.sketches import cms_build
+
+    assert _canon(spark.read.parquet(str(state))) == _canon(
+        cms_build(all_rows, "user_id", 4, 64)
+    )
+
+
+def test_streaming_state_recovers_interrupted_swap(spark, tmp_path):
+    """State found only as the aside copy (a crash between the swap's
+    two renames) is recovered and folded into, not reset."""
+    import os
+
+    start = _sketch_loops()["cms"]
+    src, state, ckpt = tmp_path / "src", tmp_path / "state", tmp_path / "ckpt"
+    _tiny_file(spark, str(src), 0, 20)
+    _drain(spark, start, src, state, ckpt)
+    os.rename(state, str(state) + ".prev")
+
+    _tiny_file(spark, str(src), 20, 40)
+    _drain(spark, start, src, state, ckpt)
+    assert _canon(spark.read.parquet(str(state))) == _cms_grid(spark, src)
+    assert not os.path.exists(str(state) + ".prev")
 
 
 def test_space_saving_exact_when_m_covers_domain(spark, normalized_events_dir):
@@ -694,7 +837,7 @@ def test_space_saving_guarantees_with_small_m(spark, normalized_events_dir):
 def test_streaming_weighted_reservoir_matches_batch(spark, normalized_events_dir):
     """Streaming Efraimidis-Spirakis reservoir: per-microbatch
     union+re-cut of content-hashed keys converges to the batch sample
-    of all data (top-k merges; no batch-id guard needed)."""
+    of all data (top-k merges)."""
     import tempfile
 
     from data_integration_case_study_spark.functions.text import hash60
@@ -737,8 +880,7 @@ def test_streaming_weighted_reservoir_matches_batch(spark, normalized_events_dir
 
 def test_streaming_histogram_sketch_matches_batch(spark, normalized_events_dir):
     """Streaming histogram maintenance: additive bin-counter merge per
-    microbatch (batch-id replay guard) converges to the batch bin
-    counts of all data, and the estimated quantiles match the batch
+    microbatch converges to the batch bin counts of all data, and the estimated quantiles match the batch
     estimator exactly."""
     import tempfile
 

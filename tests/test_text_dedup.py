@@ -394,3 +394,17 @@ def test_ngram_bitset_verify_matches_array_verify(spark):
     got_fast, got_slow = rows(fast), rows(slow)
     assert got_fast, "test must produce pairs"
     assert got_fast == got_slow
+
+
+def test_ngram_window_path_on_empty_vocabulary(spark):
+    """An empty corpus, or one whose token arrays are all empty, has an
+    empty vocabulary; the window path must fall back to the array
+    verify and return no pairs instead of building a zero-word bitset."""
+    empty = spark.createDataFrame([], "id long, t string, blk string")
+    blank = spark.createDataFrame(
+        [(1, "", "a"), (2, "   ", "a")], "id long, t string, blk string"
+    )
+    for df in (empty, blank):
+        out = dedup.ngram_jaccard_pairs(df, "id", "t", "blk", block_window=4)
+        assert out.columns == ["id_a", "id_b", "block", "jaccard"]
+        assert out.collect() == []
