@@ -409,16 +409,15 @@ def _env_fingerprint() -> dict:
     IDENTICAL code (driver 37.3s vs solo 22.3s, uniform 1.25-2.4x
     per-query including scan shapes untouched since round 2). This block
     lets a verdict separate box contention from a real regression."""
-    import multiprocessing
     import platform
 
+    from data_integration_case_study_spark.session import LOCAL_CORES
+
     fp: dict = {
-        # Effective core count: Spark's master is local[$SPARK_GRAFT_CPUS]
-        # (session.py), so the fingerprint must report the SAME number or
-        # a low-core driver run is unreadable from the record (the r11
-        # scaling block flagged suspect_cpus_ignored on exactly this).
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS",
-                                   multiprocessing.cpu_count())),
+        # Effective core count: the session's master is local[LOCAL_CORES],
+        # so the fingerprint reports that same number, or a low-core
+        # driver run is unreadable from the record.
+        "cpus": LOCAL_CORES,
         "platform": platform.platform(),
         "python": platform.python_version(),
     }

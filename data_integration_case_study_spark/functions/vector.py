@@ -171,10 +171,13 @@ def adaptive_n_planes(
     """Corpus-size-derived LSH plane count: the smallest ``p`` with
     ``2^p * target_bucket >= n_rows`` — i.e. the expected bucket
     population under a uniform split stays <= ``target_bucket`` — clamped
-    to [min_planes, max_planes]. This is the size dispatcher
-    (:func:`operators.similarity.topk`'s pattern) applied to the
-    bucket-join family: planes grow with log(N), so per-bucket pair work
-    stays ~constant instead of quadratic at a fixed plane count.
+    to [min_planes, max_planes]. Every LSH operator that sizes itself
+    from the corpus uses it: the bucket self-joins
+    (:func:`operators.similarity.embedding_neardup_pairs_lsh`,
+    :func:`operators.similarity.knn_graph`) and the LSH branch of
+    :func:`operators.similarity.topk`. Planes grow with log(N), so
+    per-bucket pair work stays ~constant instead of quadratic at a fixed
+    plane count.
 
     Integer-only arithmetic (ceil-div + bit_length), so the DuckDB twin
     :func:`adaptive_n_planes_sql` computes the identical value with no

@@ -7,9 +7,18 @@ applies them:
 2. n-gram Jaccard within blocking keys — self-join bounded by blocks.
 3. MinHash-LSH — signature (map-only) → band buckets (one shuffle) →
    candidate pairs (bucket-local joins) → Jaccard verify. Near-linear.
-4. SimHash — 64-bit fingerprints, Hamming-distance candidates via
+4. SimHash — 60-bit fingerprints, Hamming-distance candidates via
    band-of-bits blocking.
 5. embedding-cosine near-dup — lives in operators/similarity.py.
+
+Every pair-forming operator here and in operators/similarity.py is built
+from the same three stages, each written once:
+
+- candidates: :func:`_self_pairs` (every ``id_a < id_b`` pair sharing a
+  blocking key) or :func:`_successor_pairs` (each row with its W rank
+  successors inside a block, for blocks that grow with the corpus);
+- verify: :func:`_attach` joins each end's payload onto the id pairs;
+- cut: :func:`_top_k` keeps the first k rows per group.
 
 All native expressions (sha2 / transform / aggregate) — no UDFs.
 MinHash/SimHash signatures hash shingles/tokens with the sha256-derived
@@ -61,14 +70,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         .agg(F.min_by(F.struct(*cols), F.col(id_col)).alias("__row"))
         .select("__row.*")
     )
-
-
-def jaccard(a, b):
-    """Jaccard similarity of two array columns (as sets)."""
-    a_d, b_d = F.array_distinct(a), F.array_distinct(b)
-    inter = F.size(F.array_intersect(a_d, b_d)).cast("double")
-    union = F.size(F.array_union(a_d, b_d)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
 def jaccard_distinct(a, b):
@@ -220,6 +221,140 @@ def blocked_rank(df: DataFrame, block_col: str, order_col: str) -> DataFrame:
     )
 
 
+def _side(frame: DataFrame, s: str, keep: list, cols) -> DataFrame:
+    """One end of a pair: ``id`` as ``id_{s}``, ``keep`` as is, each of
+    ``cols`` as ``{c}_{s}``."""
+    return frame.select(
+        F.col("id").alias(f"id_{s}"), *keep,
+        *[F.col(c).alias(f"{c}_{s}") for c in cols],
+    )
+
+
+def _self_pairs(frame: DataFrame, on, cols=()) -> DataFrame:
+    """Every unordered pair of ``frame`` rows (keyed by ``id``) that agree
+    on ``on`` (a column name or list), once, with ``id_a < id_b``: columns
+    (*on, id_a, id_b) plus each of ``cols`` riding along as ``{c}_a`` and
+    ``{c}_b``. Carrying the payload through the join keeps one exchange
+    per side where blocks are bounded (LSH buckets, shingle keys); where
+    a block can grow with the corpus, use :func:`_successor_pairs`."""
+    on = [on] if isinstance(on, str) else list(on)
+    return (
+        _side(frame, "a", on, cols)
+        .join(_side(frame, "b", on, cols), on)
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+
+
+def _successor_pairs(ranked: DataFrame, on, window: int, cols=()) -> DataFrame:
+    """Each row of ``ranked`` (``id``, ``on``, and ``__r``, its 1-based
+    rank within ``on``) paired with its ``window`` rank successors: a
+    b-member block yields b·window pairs instead of b²/2, a constant
+    per-row comparison budget. Duplicate clusters survive through
+    successor chaining (connected components rebuild the group); pairs
+    further apart than ``window`` are not emitted. Same columns as
+    :func:`_self_pairs`.
+
+    The join is an equi-join on the TARGET rank — each row explodes to
+    the ranks it pairs with — never a residual range filter over the
+    block self-join, which would still enumerate |block|² rows. The
+    explicit repartition after the explode matters: the slim ranked
+    frame is tiny, AQE coalesces its shuffle to ~1 partition, and with
+    only broadcast joins downstream the whole exploded-probe + verify
+    pipeline would run as ONE task (a single core pinned for >13 min at
+    sf1); the shuffle on the join key restores parallelism and
+    co-partitions the candidate join."""
+    on = [on] if isinstance(on, str) else list(on)
+    ahead = F.explode(F.sequence(F.col("__r") + 1, F.col("__r") + window))
+    probes = _side(ranked, "a", [*on, ahead.alias("__r")], cols).repartition(
+        *on, "__r"
+    )
+    return probes.join(
+        _side(ranked, "b", [*on, "__r"], cols), [*on, "__r"]
+    ).drop("__r")
+
+
+def _attach(pairs: DataFrame, frame: DataFrame, cols, frame_b=None) -> DataFrame:
+    """Join ``cols`` of ``frame`` (keyed by ``id``) onto both ends of
+    ``pairs``, as ``{c}_a`` on ``id_a`` and ``{c}_b`` on ``id_b``;
+    ``frame_b`` serves the ``id_b`` end when the two ends come from
+    different frames. Candidate pairing carries only ids, so the
+    variable-length payload is never replicated per probe or per band."""
+    for s, f in (("a", frame), ("b", frame if frame_b is None else frame_b)):
+        pairs = pairs.join(_side(f, s, [], cols), f"id_{s}")
+    return pairs
+
+
+def _top_k(scored: DataFrame, by, order: list, k: int) -> DataFrame:
+    """The first ``k`` rows of each ``by`` group in ``order``, numbered
+    1..k in ``rank``. ``order`` must end in a column unique within the
+    group, so the cut is deterministic in any engine."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+# Largest distinct token vocabulary the n-gram verify encodes as bitsets.
+_BITSET_MAX_VOCAB = 256
+
+
+def _set_summary(base: DataFrame):
+    """The per-doc token-set summary the n-gram verify reads, cached
+    because both verify sides re-read it: ``(summary, cols, inter)``,
+    where ``summary`` holds (id, block, sz, *payload), ``cols`` names the
+    columns each pair side needs and ``inter`` is |a ∩ b| as a double
+    over those columns' ``_a``/``_b`` copies.
+
+    When the DISTINCT token vocabulary is numeric and fits in
+    ``_BITSET_MAX_VOCAB`` values (probed with one bounded
+    ``distinct().limit(cap+1)`` pass — at most cap+1 longs reach the
+    driver), each set is a fixed-width bitmask over the sorted
+    vocabulary (ceil(V/64) longs) and |a ∩ b| is the popcount of
+    word-wise ANDs: the verify joins carry ~8·ceil(V/64)+4 bytes per
+    side instead of the token array, and per-pair work is a handful of
+    AND+popcount instructions instead of a hash-set build + probe.
+    Positions are a bijection from distinct token values, so the same
+    integers enter the same division as with the arrays — identical
+    jaccard doubles. Larger or string vocabularies (embedding strings
+    into SQL text is an escaping liability) keep the token arrays; an
+    empty vocabulary has no bitset either (zero mask words would build
+    an empty SQL sum)."""
+    from data_integration_case_study_spark.operators import cache
+
+    probe = [
+        r[0]
+        for r in base.select(F.explode("toks").alias("__t"))
+        .distinct()
+        .limit(_BITSET_MAX_VOCAB + 1)
+        .collect()
+    ]
+    if not (
+        probe and len(probe) <= _BITSET_MAX_VOCAB
+        and all(isinstance(v, int) for v in probe)
+    ):
+        summary = base.withColumn("sz", F.size("toks"))
+        inter = F.size(F.array_intersect("toks_a", "toks_b"))
+        return cache.track(summary), ["sz", "toks"], inter.cast("double")
+    nw = (len(probe) + 63) // 64
+    vs_sql = "array(" + ",".join(f"{int(v)}L" for v in sorted(probe)) + ")"
+    summary = base.selectExpr(
+        "id", "block", "size(toks) AS sz",
+        f"transform(toks, t -> array_position({vs_sql}, t) - 1) AS __pos",
+    ).selectExpr(
+        "id", "block", "sz",
+        *[
+            f"aggregate(__pos, CAST(0 AS BIGINT), (acc, p) -> "
+            f"IF(p >= {w * 64} AND p < {w * 64 + 64}, "
+            f"acc | shiftleft(CAST(1 AS BIGINT), CAST(p - {w * 64} AS INT)), "
+            f"acc)) AS m{w}"
+            for w in range(nw)
+        ],
+    )
+    inter = F.expr(" + ".join(f"bit_count(m{w}_a & m{w}_b)" for w in range(nw)))
+    masks = [f"m{w}" for w in range(nw)]
+    return cache.track(summary), ["sz", *masks], inter.cast("double")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -229,27 +364,21 @@ def ngram_jaccard_pairs(
     n: int = 1,
     tokens_col: str | None = None,
     block_window: int | None = None,
-    bitset_max_vocab: int = 256,
 ) -> DataFrame:
     """Near-dup pairs by token/{n}-gram Jaccard within a blocking key.
 
     ``block_window=None`` (default) keeps the exhaustive semantics: only
     same-block pairs are compared, cost Σ |block|². That is quadratic
-    whenever the block domain is bounded (lang has ~5 values — the
-    round-7 sf1 audit timed this form out at 10× data), so for corpora
-    where the block is not a real partitioner, ``block_window=W`` bounds
-    the join the same way ``bucket_window`` bounds degenerate LSH
-    buckets in :func:`minhash_candidate_pairs`: each doc is compared
-    only with its W id-ordered successors inside its block, turning a
-    b-member block from b²/2 into b·W pairs — linear in the corpus with
-    a constant per-doc comparison budget. Duplicate CLUSTERS survive
-    through successor chaining (connected components reconstruct the
-    group); distant same-block pairs are not emitted. The rank comes
-    from :func:`blocked_rank` (two-phase range ranking), not a plain
-    window — PARTITION BY lang would single-task-sort a whole language
-    at 100 TB. The probe side explodes only (id, block, rank) longs; the
-    token arrays join in AFTER the candidate equi-join, so the
-    variable-length payload is never replicated per probe.
+    whenever the block domain is bounded (lang has ~5 values; at 10×
+    the sf1 data this form timed out), so for corpora where the block
+    is not a real partitioner, ``block_window=W`` compares each doc only
+    with its W id-ordered successors inside its block
+    (:func:`_successor_pairs`) — linear in the corpus. The rank comes
+    from :func:`blocked_rank`, not a plain window: PARTITION BY lang
+    would single-task-sort a whole language at 100 TB. The set summary
+    (:func:`_set_summary`, a bitset when the vocabulary is small) joins
+    in AFTER the candidate equi-join, so the payload is never
+    replicated per probe.
 
     A frequency-prefix-filtered exact form (AllPairs/PPJoin) was
     A/B-measured and REJECTED for this corpus family: with a bounded
@@ -259,24 +388,6 @@ def ngram_jaccard_pairs(
     blocked all-pairs join it was meant to beat (3.6M) — 116s vs ~11s.
     Prefix filtering needs a zipfian vocabulary to bite; the successor
     bound is distribution-free.
-
-    ``bitset_max_vocab`` (r12, guide §2.3 narrower types / §1.2
-    per-pair work): when the window path's DISTINCT token/ngram
-    vocabulary fits in this many values (probed with one bounded
-    ``distinct().limit(cap+1)`` pass — at most cap+1 longs ever reach
-    the driver, the spatial pre-launch-stats pattern), each doc's token
-    SET is encoded as a fixed-width bitmask over the sorted vocabulary
-    (ceil(V/64) longs) and the verify computes |a ∩ b| as popcounts of
-    word-wise ANDs instead of ``array_intersect`` over the replayed
-    arrays. The verify joins then carry ~8·ceil(V/64)+4 bytes per side
-    instead of the token array, and the per-pair cost drops from a
-    hash-set build + probe to a handful of AND+popcount instructions.
-    EXACTLY the same integers enter the same division — positions are a
-    bijection from distinct token values, so popcount(AND) = |a ∩ b|
-    and |a ∪ b| = |a| + |b| − |a ∩ b| as before — hence identical
-    jaccard doubles and an untouched oracle. Vocabularies larger than
-    the cap (real-text corpora) keep the array verify: one wasted
-    slim probe pass, no other cost. Set 0 to disable the probe.
     """
     base_toks = _tokens(text_col, tokens_col)
     toks = F.array_distinct(
@@ -285,134 +396,18 @@ def ngram_jaccard_pairs(
     base = df.select(
         F.col(id_col).alias("id"), F.col(block_col).alias("block"), toks.alias("toks")
     )
+    summary, cols, inter = _set_summary(base)
     if block_window is None:
-        a = base.select(
-            F.col("id").alias("id_a"), "block", F.col("toks").alias("toks_a")
-        )
-        b = base.select(
-            F.col("id").alias("id_b"), "block", F.col("toks").alias("toks_b")
-        )
-        return (
-            a.join(b, "block")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn(
-                "jaccard", F.round(jaccard_distinct(F.col("toks_a"), F.col("toks_b")), 6)
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "block", "jaccard")
-        )
-
-    from data_integration_case_study_spark.operators import cache
-
-    # Bounded vocab probe (see docstring): ONE slim pass; at most
-    # cap+1 distinct token values reach the driver. Numeric (long)
-    # token domains only — both catalog callers pre-hash to hash60
-    # longs; a string vocabulary skips the bitset (literal-embedding
-    # strings into SQL text is an escaping liability for zero catalog
-    # benefit).
-    vocab: list[int] | None = None
-    if bitset_max_vocab and block_window is not None:
-        probe = [
-            r[0]
-            for r in base.select(F.explode("toks").alias("__t"))
-            .distinct()
-            .limit(bitset_max_vocab + 1)
-            .collect()
-        ]
-        # an empty vocabulary (empty corpus, all-empty token arrays)
-        # has no bitset: zero mask words would build an empty SQL sum
-        if probe and len(probe) <= bitset_max_vocab and all(
-            isinstance(v, int) for v in probe
-        ):
-            vocab = sorted(probe)
-
-    if block_window is not None and vocab is not None:
-        nw = (len(vocab) + 63) // 64
-        vs_sql = "array(" + ",".join(f"{int(v)}L" for v in vocab) + ")"
-        pos = base.selectExpr(
-            "id", "block", "size(toks) AS __sz",
-            f"transform(toks, t -> array_position({vs_sql}, t) - 1) AS __pos",
-        )
-        summary = pos.selectExpr(
-            "id", "block", "__sz",
-            *[
-                f"aggregate(__pos, CAST(0 AS BIGINT), (acc, p) -> "
-                f"IF(p >= {w * 64} AND p < {w * 64 + 64}, "
-                f"acc | shiftleft(CAST(1 AS BIGINT), CAST(p - {w * 64} AS INT)), "
-                f"acc)) AS __m{w}"
-                for w in range(nw)
-            ],
-        )
-        # the compact mask summary (8*nw+4 bytes/doc) is what the two
-        # verify sides re-read — cache IT, not the token arrays
-        summary = cache.track(summary)
+        pairs = _self_pairs(summary, "block", cols)
+    else:
         ranked = blocked_rank(summary.select("id", "block"), "block", "id")
-        probes = ranked.select(
-            F.col("id").alias("id_a"),
-            "block",
-            F.explode(
-                F.sequence(F.col("__r") + 1, F.col("__r") + block_window)
-            ).alias("__r"),
-        ).repartition(F.col("block"), F.col("__r"))
-        cand = probes.join(
-            ranked.select(F.col("id").alias("id_b"), "block", "__r"),
-            ["block", "__r"],
-        ).select("id_a", "id_b", "block")
-        sa = summary.select(
-            F.col("id").alias("id_a"), F.col("__sz").alias("__sza"),
-            *[F.col(f"__m{w}").alias(f"__ma{w}") for w in range(nw)],
+        pairs = _attach(
+            _successor_pairs(ranked, "block", block_window), summary, cols
         )
-        sb = summary.select(
-            F.col("id").alias("id_b"), F.col("__sz").alias("__szb"),
-            *[F.col(f"__m{w}").alias(f"__mb{w}") for w in range(nw)],
-        )
-        inter = F.expr(
-            " + ".join(f"bit_count(__ma{w} & __mb{w})" for w in range(nw))
-        ).cast("double")
-        union = (F.col("__sza") + F.col("__szb")).cast("double") - inter
-        return (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "block", "jaccard")
-        )
-
-    # token arrays are read twice (both verify sides)
-    base = cache.track(base)
-    ranked = blocked_rank(base.select("id", "block"), "block", "id")
-    # REPARTITION after the W-way explode: the slim ranked frame is tiny,
-    # so AQE coalesces its shuffle to ~1 partition, and with only
-    # broadcast joins downstream the entire exploded-probe + verify
-    # pipeline would then run as ONE task (observed: a single core
-    # pinned for >13 min at sf1). The explicit shuffle on the join key
-    # both restores parallelism and co-partitions the candidate join.
-    probes = ranked.select(
-        F.col("id").alias("id_a"),
-        "block",
-        F.explode(
-            F.sequence(F.col("__r") + 1, F.col("__r") + block_window)
-        ).alias("__r"),
-    ).repartition(F.col("block"), F.col("__r"))
-    cand = probes.join(
-        ranked.select(F.col("id").alias("id_b"), "block", "__r"),
-        ["block", "__r"],
-    ).select("id_a", "id_b", "block")
+    union = (F.col("sz_a") + F.col("sz_b")).cast("double") - inter
+    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return (
-        cand.join(
-            base.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a")),
-            "id_a",
-        )
-        .join(
-            base.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b")),
-            "id_b",
-        )
-        .withColumn("jaccard", F.round(jaccard_distinct(F.col("toks_a"), F.col("toks_b")), 6))
+        pairs.withColumn("jaccard", F.round(jac, 6))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "block", "jaccard")
     )
@@ -535,6 +530,19 @@ def _band_buckets(per_doc: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("id", "bb.band", "bb.bucket")
 
 
+def _shingle_verify(
+    pairs: DataFrame, per_doc_a: DataFrame, per_doc_b: DataFrame, threshold: float
+) -> DataFrame:
+    """The MinHash verify: exact Jaccard (6 decimals) of the two ends'
+    shingle-hash sets, kept at >= ``threshold``."""
+    jac = jaccard_distinct(F.col("shingles_a"), F.col("shingles_b"))
+    return (
+        _attach(pairs, per_doc_a, ["shingles"], per_doc_b)
+        .withColumn("jaccard", F.round(jac, 6))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def minhash_candidate_pairs(
     df: DataFrame, id_col: str, text_col: str,
     n: int = 3, num_hashes: int = 32, bands: int = 8,
@@ -574,40 +582,15 @@ def minhash_candidate_pairs(
         df, id_col, text_col, n, num_hashes, seed, tokens_col=tokens_col
     )
     banded = _band_buckets(per_doc, num_hashes, bands)
-
     if bucket_window is None:
-        cand = (
-            banded.alias("x")
-            .join(banded.alias("y"), ["band", "bucket"])
-            .filter(F.col("x.id") < F.col("y.id"))
-        )
+        cand = _self_pairs(banded, ["band", "bucket"])
     else:
-        # equi-join on the TARGET rank (not a residual range filter over the
-        # bucket self-join, which would still enumerate |bucket|^2 rows):
-        # each member explodes to its `bucket_window` successor ranks, so
-        # the join produces exactly |bucket| * window candidates.
         w = Window.partitionBy("band", "bucket").orderBy("id")
         ranked = banded.withColumn("__r", F.row_number().over(w))
-        probes = ranked.select(
-            "id", "band", "bucket",
-            F.explode(
-                F.sequence(F.col("__r") + 1, F.col("__r") + bucket_window)
-            ).alias("__r"),
-        )
-        cand = probes.alias("x").join(ranked.alias("y"), ["band", "bucket", "__r"])
-    pairs = (
-        cand.select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh = per_doc.select("id", "shingles")
-    verify = (
-        pairs.join(sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b")
-    )
-    return (
-        verify.withColumn("jaccard", F.round(jaccard_distinct(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        cand = _successor_pairs(ranked, ["band", "bucket"], bucket_window)
+    pairs = cand.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
+    return _shingle_verify(pairs, per_doc, per_doc, threshold).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
@@ -636,26 +619,17 @@ def minhash_incremental_pairs(
     corp_pd = _minhash_per_doc(corpus_df, id_col, text_col, n, num_hashes, seed)
     cand = (
         _band_buckets(new_pd, num_hashes, bands)
-        .withColumnRenamed("id", "new_id")
+        .withColumnRenamed("id", "id_a")
         .join(
             _band_buckets(corp_pd, num_hashes, bands)
-            .withColumnRenamed("id", "dup_of"),
+            .withColumnRenamed("id", "id_b"),
             ["band", "bucket"],
         )
-        .select("new_id", "dup_of")
-        .dropDuplicates(["new_id", "dup_of"])
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
     )
-    verify = cand.join(
-        new_pd.select(F.col("id").alias("new_id"), F.col("shingles").alias("sh_a")),
-        "new_id",
-    ).join(
-        corp_pd.select(F.col("id").alias("dup_of"), F.col("shingles").alias("sh_b")),
-        "dup_of",
-    )
-    return (
-        verify.withColumn("jaccard", F.round(jaccard_distinct(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "dup_of", "jaccard")
+    return _shingle_verify(cand, new_pd, corp_pd, threshold).select(
+        F.col("id_a").alias("new_id"), F.col("id_b").alias("dup_of"), "jaccard"
     )
 
 
@@ -724,17 +698,15 @@ def simhash_near_pairs(
         ])).alias("qq"),
     ).select("id", "simhash", "qq.q", "qq.qv")
     cand = (
-        quarters.alias("x")
-        .join(quarters.alias("y"), ["q", "qv"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(
-            F.col("x.id").alias("id_a"), F.col("x.simhash").alias("h_a"),
-            F.col("y.id").alias("id_b"), F.col("y.simhash").alias("h_b"),
-        )
+        _self_pairs(quarters, ["q", "qv"], ["simhash"])
+        .select("id_a", "id_b", "simhash_a", "simhash_b")
         .distinct()
     )
     return (
-        cand.withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
+        cand.withColumn(
+            "hamming",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
+        )
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
@@ -826,40 +798,12 @@ def jaccard_join_prefix(
     prefix = sets.select(
         "id", F.explode(F.slice("sh", F.lit(1), plen)).alias("h")
     )
-    cand = (
-        prefix.alias("x")
-        .join(prefix.alias("y"), "h")
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-    )
-    s = sets.select("id", "sh", "sz")
-    verify = (
-        cand.join(
-            s.select(
-                F.col("id").alias("id_a"),
-                F.col("sh").alias("sh_a"),
-                F.col("sz").alias("sz_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            s.select(
-                F.col("id").alias("id_b"),
-                F.col("sh").alias("sh_b"),
-                F.col("sz").alias("sz_b"),
-            ),
-            "id_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
-        )
-    )
-    return verify.filter(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
+    pairs = _self_pairs(prefix, "h").select("id_a", "id_b").distinct()
+    return (
+        _attach(pairs, sets, ["sh"])
+        .withColumn("jaccard", jaccard_distinct(F.col("sh_a"), F.col("sh_b")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -901,35 +845,26 @@ def containment_join_prefix(
     prefix = sets.select(
         "id", F.explode(F.slice("sh", F.lit(1), plen)).alias("h")
     )
-    cand = (
-        prefix.alias("x")
-        .join(sh_rows.alias("y"), "h")
-        .filter(F.col("x.id") != F.col("y.id"))
-        .select(F.col("x.id").alias("src_id"), F.col("y.id").alias("dst_id"))
+    pairs = (
+        prefix.withColumnRenamed("id", "id_a")
+        .join(sh_rows.withColumnRenamed("id", "id_b"), "h")
+        .filter(F.col("id_a") != F.col("id_b"))
+        .select("id_a", "id_b")
         .distinct()
     )
-    s = sets.select("id", "sh", "sz")
-    verify = (
-        cand.join(
-            s.select(
-                F.col("id").alias("src_id"),
-                F.col("sh").alias("sh_s"),
-                F.col("sz").alias("sz_s"),
-            ),
-            "src_id",
-        )
-        .join(
-            s.select(F.col("id").alias("dst_id"), F.col("sh").alias("sh_d")),
-            "dst_id",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("sh_s", "sh_d")))
+    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
+    return (
+        _attach(pairs, sets, ["sh", "sz"])
+        .withColumn("n_common", n_common)
         .withColumn(
             "containment",
-            F.col("n_common").cast("double") / F.col("sz_s").cast("double"),
+            F.col("n_common").cast("double") / F.col("sz_a").cast("double"),
         )
-    )
-    return verify.filter(F.col("containment") >= threshold).select(
-        "src_id", "dst_id", "n_common", "containment"
+        .filter(F.col("containment") >= threshold)
+        .select(
+            F.col("id_a").alias("src_id"), F.col("id_b").alias("dst_id"),
+            "n_common", "containment",
+        )
     )
 
 
@@ -963,21 +898,9 @@ def sorted_neighborhood_pairs(
     )
     w = Window.partitionBy("block").orderBy(F.col("key").asc(), F.col("id").asc())
     ranked = base.withColumn("__r", F.row_number().over(w))
-    probes = ranked.select(
-        F.col("id").alias("id_a"),
-        F.col("key").alias("key_a"),
-        "block",
-        F.explode(
-            F.sequence(F.col("__r") + 1, F.col("__r") + window)
-        ).alias("__r"),
+    return _successor_pairs(ranked, "block", window, ["key"]).select(
+        "id_a", "id_b", "key_a", "key_b", "block"
     )
-    return probes.join(
-        ranked.select(
-            F.col("id").alias("id_b"), F.col("key").alias("key_b"),
-            "block", "__r",
-        ),
-        ["block", "__r"],
-    ).select("id_a", "id_b", "key_a", "key_b", "block")
 
 
 def winnowing_fingerprints(

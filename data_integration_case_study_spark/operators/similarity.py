@@ -2,21 +2,35 @@
 
 Baseline: exhaustive cosine top-k in the explode + decimal-aggregate shape
 (whole-stage codegen, order-independent accumulation — oracle-checkable
-bit-for-bit). Scale path: random-hyperplane LSH bucketing that prunes the
-candidate set before an exact re-rank; at 1B+ vectors the bucket join
-replaces the full cross score, same as MinHash replaces all-pairs Jaccard.
+bit-for-bit). Scale paths: random-hyperplane LSH bucketing that prunes the
+candidate set before an exact re-rank (at 1B+ vectors the bucket join
+replaces the full cross score, same as MinHash replaces all-pairs
+Jaccard), and IVF cells / PQ codes, alone or composed.
+
+Every operator forms its candidates, verifies them and cuts its top k with
+the shared stages of operators/dedup.py (``_self_pairs``,
+``_successor_pairs``, ``_attach``, ``_top_k``), and every cosine is divided
+once, in :func:`_cosine`. A zero vector has no direction: its cosine is
+null and dropped there, so it is nobody's neighbour and has none itself.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_integration_case_study_spark.operators.iterate import lineage_truncator
 from data_integration_case_study_spark.functions.vector import (
     adaptive_n_planes,
     random_hyperplane_signature,
 )
+from data_integration_case_study_spark.operators.dedup import (
+    _attach,
+    _self_pairs,
+    _successor_pairs,
+    _top_k,
+    blocked_rank,
+)
+from data_integration_case_study_spark.operators.iterate import lineage_truncator
 
 # Exact cross-engine accumulation: products are snapped to a 2^-40 binary
 # grid with floor(x*2^40 + 0.5) — deterministic round-half-up in every
@@ -25,12 +39,14 @@ from data_integration_case_study_spark.functions.vector import (
 # binary value above that), summed exactly as DECIMAL(38,0).
 _GRID = float(1 << 40)
 
+# Corpus size up to which topk scores exhaustively: below it exact recall
+# costs less than the LSH setup.
+_BRUTE_FORCE_LIMIT = 100_000
+
 
 def _exact_sum_of_products(x, y):
-    from pyspark.sql import functions as _F
-
-    snapped = _F.floor(x * y * _F.lit(_GRID) + _F.lit(0.5)).cast("decimal(38,0)")
-    return _F.sum(snapped).cast("double") / _F.lit(_GRID)
+    snapped = F.floor(x * y * F.lit(_GRID) + F.lit(0.5)).cast("decimal(38,0)")
+    return F.sum(snapped).cast("double") / F.lit(_GRID)
 
 
 def _exact_dot_cols(x: Column, y: Column) -> Column:
@@ -62,12 +78,32 @@ def _exact_norm_col(v: Column) -> Column:
     return F.sqrt(_exact_dot_cols(v, v))
 
 
-def _exploded(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
-    """(id, pos, val-as-double) rows from an array column."""
+def _cosine(pairs: DataFrame, dot: Column, norm_a: str, norm_b: str) -> DataFrame:
+    """``cosine`` = dot / (norm_a · norm_b), the one cosine division of
+    this module. ``try_divide`` turns a zero norm into a null score
+    instead of an ANSI ``DIVIDE_BY_ZERO``, and null scores are dropped
+    here, before any threshold or top-k."""
+    cos = F.try_divide(dot, F.col(norm_a) * F.col(norm_b))
+    return pairs.withColumn("cosine", cos).filter(F.col("cosine").isNotNull())
+
+
+def _pair_cosine(pairs: DataFrame) -> DataFrame:
+    """:func:`_cosine` of pairs carrying both vectors and norms
+    (``v_a``/``v_b``, ``nrm_a``/``nrm_b``), the dot folded per pair row."""
+    return _cosine(
+        pairs, _exact_dot_cols(F.col("v_a"), F.col("v_b")), "nrm_a", "nrm_b"
+    )
+
+
+def _exploded(
+    df: DataFrame, id_col: str, vec_col: str,
+    id_out: str = "id", val_out: str = "val",
+) -> DataFrame:
+    """(id_out, pos, val_out as double) rows from an array column."""
     return df.select(
-        F.col(id_col).alias(f"{prefix}_id"),
-        F.posexplode(F.col(vec_col)).alias("pos", f"{prefix}_val"),
-    ).withColumn(f"{prefix}_val", F.col(f"{prefix}_val").cast("double"))
+        F.col(id_col).alias(id_out),
+        F.posexplode(F.col(vec_col)).alias("pos", val_out),
+    ).withColumn(val_out, F.col(val_out).cast("double"))
 
 
 def _fixed_dim(df: DataFrame, vec_col: str) -> int | None:
@@ -91,13 +127,21 @@ def _count_and_dim(df: DataFrame, vec_col: str) -> tuple[int, int | None]:
     return (row["n"], row["d"]) if row["n"] else (0, None)
 
 
-def _norms(df: DataFrame, id_col: str, vec_col: str, out: str) -> DataFrame:
-    """Per-vector L2 norm via exact decimal sum of squares."""
-    e = _exploded(df, id_col, vec_col, "n")
+def _norms(
+    df: DataFrame, id_col: str, vec_col: str, id_out: str, out: str
+) -> DataFrame:
+    """(id_out, out): per-vector L2 norm via exact decimal sum of squares."""
     return (
-        e.groupBy("n_id")
-        .agg(F.sqrt(_exact_sum_of_products(F.col("n_val"), F.col("n_val"))).alias(out))
-        .withColumnRenamed("n_id", id_col)
+        _exploded(df, id_col, vec_col, id_out)
+        .groupBy(id_out)
+        .agg(F.sqrt(_exact_sum_of_products(F.col("val"), F.col("val"))).alias(out))
+    )
+
+
+def _ranked_cosines(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k cut of (q_id, c_id, cosine) rows per query."""
+    return _top_k(scored, "q_id", [F.col("cosine").desc(), "c_id"], k).select(
+        "q_id", "c_id", "cosine", "rank"
     )
 
 
@@ -116,27 +160,19 @@ def cosine_topk_bruteforce(
     Everything codegen'd; the only shuffles are the dot-product agg and
     the k-row-per-query window.
     """
-    qe = _exploded(queries, id_col, vec_col, "q")
-    ce = _exploded(corpus, id_col, vec_col, "c")
+    qe = _exploded(queries, id_col, vec_col, "q_id", "q_val")
+    ce = _exploded(corpus, id_col, vec_col, "c_id", "c_val")
     dots = (
         ce.join(F.broadcast(qe), "pos")
         .groupBy("q_id", "c_id")
         .agg(_exact_sum_of_products(F.col("q_val"), F.col("c_val")).alias("dot"))
     )
-    qn = _norms(queries, id_col, vec_col, "q_norm").withColumnRenamed(id_col, "q_id")
-    cn = _norms(corpus, id_col, vec_col, "c_norm").withColumnRenamed(id_col, "c_id")
     scored = (
-        dots.join(F.broadcast(qn), "q_id")
-        .join(cn, "c_id")
+        dots.join(F.broadcast(_norms(queries, id_col, vec_col, "q_id", "q_norm")), "q_id")
+        .join(_norms(corpus, id_col, vec_col, "c_id", "c_norm"), "c_id")
         .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("cosine", F.col("dot") / (F.col("q_norm") * F.col("c_norm")))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    return _ranked_cosines(_cosine(scored, F.col("dot"), "q_norm", "c_norm"), k)
 
 
 def ann_lsh_topk(
@@ -189,21 +225,11 @@ def ann_lsh_topk(
             F.array(*[F.col("__sig").bitwiseXOR(F.lit(m)) for m in masks])
         ).alias("bucket"),
     )
-    scored = (
-        c_sig.join(F.broadcast(q_sig), "bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn(
-            "cosine",
-            _exact_dot_cols(F.col("qv"), F.col("cv"))
-            / (F.col("q_norm") * F.col("c_norm")),
-        )
+    scored = c_sig.join(F.broadcast(q_sig), "bucket").filter(
+        F.col("q_id") != F.col("c_id")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    dot = _exact_dot_cols(F.col("qv"), F.col("cv"))
+    return _ranked_cosines(_cosine(scored, dot, "q_norm", "c_norm"), k)
 
 
 def topk(
@@ -212,54 +238,50 @@ def topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    mode: str = "auto",
-    brute_force_limit: int = 100_000,
-    n_planes: int = 8,
-    probe_bits: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """The similarity-join STRATEGY (SURVEY §4's candidate custom work):
     dispatch brute-force vs LSH from the corpus size.
 
-    ``mode='auto'`` counts the corpus once (a metadata-cheap count on
-    parquet sources) and picks exhaustive scoring below
-    ``brute_force_limit`` — where exact recall costs less than the LSH
-    setup — and the multi-probe hyperplane path above it, where O(N·Q·d)
-    scoring stops being a job anyone waits for. This is a library-level
-    rewrite, deliberately NOT a Catalyst rule: the decision needs a
-    cardinality the optimizer already exposes, and a function keeps the
-    choice testable and overridable (``mode='brute'|'lsh'``)."""
-    if mode == "auto":
-        mode = "brute" if corpus.count() <= brute_force_limit else "lsh"
-    if mode == "brute":
+    Counts the corpus once (a metadata-cheap count on parquet sources)
+    and scores exhaustively up to ``_BRUTE_FORCE_LIMIT`` rows — where
+    exact recall costs less than the LSH setup — and with the 4-bit
+    multi-probe hyperplane path above it, where O(N·Q·d) scoring stops
+    being a job anyone waits for; that path's plane count comes from the
+    same count (:func:`functions.vector.adaptive_n_planes`). This is a
+    library-level rewrite, deliberately NOT a Catalyst rule: the
+    decision needs a cardinality the optimizer already exposes, and a
+    function keeps the choice testable."""
+    n = corpus.count()
+    if n <= _BRUTE_FORCE_LIMIT:
         return cosine_topk_bruteforce(corpus, queries, id_col, vec_col, k)
-    if mode == "lsh":
-        return ann_lsh_topk(
-            corpus, queries, id_col, vec_col, k,
-            n_planes=n_planes, seed=seed, probe_bits=probe_bits,
-        )
-    raise ValueError(f"unknown mode {mode!r} (auto|brute|lsh)")
+    return ann_lsh_topk(
+        corpus, queries, id_col, vec_col, k,
+        n_planes=adaptive_n_planes(n), probe_bits=4,
+    )
 
 
 def _assign_cells(
-    exploded: DataFrame, cent_exploded: DataFrame, cent_norms: DataFrame,
-    id_col: str, top_cells: int,
+    exploded: DataFrame, cent_exploded: DataFrame, id_col: str, top_cells: int
 ) -> DataFrame:
-    """Rank cells per vector by dot/centroid-norm (vector's own norm is
-    constant within its argmax, so it cancels); keep the top ``top_cells``."""
-    dots = (
+    """(id_col, cell): each vector's ``top_cells`` best cells by
+    dot / centroid norm (the vector's own norm is constant within its
+    argmax, so it cancels). ``exploded`` is (id_col, pos, val),
+    ``cent_exploded`` (cell, pos, c_val). A zero centroid has no
+    direction and is nobody's cell."""
+    cell_norms = cent_exploded.groupBy("cell").agg(
+        F.sqrt(_exact_sum_of_products(F.col("c_val"), F.col("c_val"))).alias("cell_norm")
+    )
+    scored = (
         exploded.join(F.broadcast(cent_exploded), "pos")
         .groupBy(id_col, "cell")
         .agg(_exact_sum_of_products(F.col("val"), F.col("c_val")).alias("dot"))
-        .join(F.broadcast(cent_norms), "cell")
-        .withColumn("score", F.col("dot") / F.col("cell_norm"))
+        .join(F.broadcast(cell_norms), "cell")
+        .withColumn("score", F.try_divide(F.col("dot"), F.col("cell_norm")))
+        .filter(F.col("score").isNotNull())
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("cell"))
-    return (
-        dots.withColumn("__cr", F.row_number().over(w))
-        .filter(F.col("__cr") <= top_cells)
-        .select(id_col, "cell")
-    )
+    return _top_k(
+        scored, id_col, [F.col("score").desc(), "cell"], top_cells
+    ).select(id_col, "cell")
 
 
 def kmeans_centroids(
@@ -293,19 +315,14 @@ def kmeans_centroids(
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     trunc = lineage_truncator(df.sparkSession, checkpoint_dir)
-    e = df.select(
-        F.col(id_col).alias("id"), F.posexplode(F.col(vec_col)).alias("pos", "val")
-    ).withColumn("val", F.col("val").cast("double"))
+    e = _exploded(df, id_col, vec_col)
     cents = e.filter(F.col("id") < k).select(
         F.col("id").alias("cell"), "pos", F.col("val").alias("c_val")
     )
     scale = float(1 << 48)
     assign = None
     for _ in range(n_iter):
-        cn = cents.groupBy("cell").agg(
-            F.sqrt(_exact_sum_of_products(F.col("c_val"), F.col("c_val"))).alias("cell_norm")
-        )
-        assign = _assign_cells(e, cents, cn, "id", 1)
+        assign = _assign_cells(e, cents, "id", 1)
         cents = trunc(
             e.join(assign, "id")
             .groupBy("cell", "pos")
@@ -322,6 +339,44 @@ def kmeans_centroids(
     members = assign.groupBy("cell").agg(F.count(F.lit(1)).alias("members"))
     return cents.join(members, "cell").select(
         "cell", "pos", F.col("c_val").alias("val"), "members"
+    )
+
+
+
+
+def _ivf_candidates(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_cells: int,
+    nprobe: int,
+    centroids: DataFrame | None = None,
+) -> DataFrame:
+    """The IVF pruning stage: (q_id, c_id) for every corpus vector in one
+    of the query's ``nprobe`` nearest cells (self-matches excluded).
+    Corpus vectors sit in their single nearest cell. Cells come from
+    ``centroids`` (long form: cell, pos and c_val or val) or, when None,
+    from the ``n_cells`` lowest-id corpus vectors. Centroids are tiny and
+    broadcast; each assignment is a map-side join + one agg."""
+    if centroids is None:
+        ce = _exploded(
+            corpus.filter(F.col(id_col) < n_cells), id_col, vec_col, "cell", "c_val"
+        )
+    else:
+        vcol = "c_val" if "c_val" in centroids.columns else "val"
+        ce = centroids.select(
+            "cell", "pos", F.col(vcol).cast("double").alias("c_val")
+        )
+    corp_cells = _assign_cells(_exploded(corpus, id_col, vec_col, "c_id"), ce, "c_id", 1)
+    qry_cells = _assign_cells(
+        _exploded(queries, id_col, vec_col, "q_id"), ce, "q_id", nprobe
+    )
+    return (
+        qry_cells.join(corp_cells, "cell")
+        .select("q_id", "c_id")
+        .filter(F.col("q_id") != F.col("c_id"))
+        .distinct()
     )
 
 
@@ -349,57 +404,86 @@ def ivf_topk(
     join + one agg; the search join hits ~nprobe/n_cells of the corpus.
     Fully deterministic → oracle-checkable end to end, unlike the
     hash-based LSH path."""
-    if centroids is None:
-        cents = corpus.filter(F.col(id_col) < n_cells).select(
-            F.col(id_col).alias("cell"), F.col(vec_col).alias("c_vec")
-        )
-        ce = cents.select(
-            "cell", F.posexplode("c_vec").alias("pos", "c_val")
-        ).withColumn("c_val", F.col("c_val").cast("double"))
-    else:
-        vcol = "c_val" if "c_val" in centroids.columns else "val"
-        ce = centroids.select(
-            "cell", "pos", F.col(vcol).cast("double").alias("c_val")
-        )
-    cn = (
-        ce.groupBy("cell")
-        .agg(F.sqrt(_exact_sum_of_products(F.col("c_val"), F.col("c_val"))).alias("cell_norm"))
-    )
-
-    corp_e = _exploded(corpus, id_col, vec_col, "x").withColumnRenamed("x_id", "id")\
-        .withColumnRenamed("x_val", "val")
-    qry_e = _exploded(queries, id_col, vec_col, "x").withColumnRenamed("x_id", "id")\
-        .withColumnRenamed("x_val", "val")
-
-    corp_cells = _assign_cells(corp_e, ce, cn, "id", 1)
-    qry_cells = _assign_cells(qry_e, ce, cn, "id", nprobe).withColumnRenamed("id", "q_id")
-
-    cand = (
-        qry_cells.join(corp_cells, "cell")
-        .select("q_id", F.col("id").alias("c_id"))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .distinct()
+    cand = _ivf_candidates(
+        corpus, queries, id_col, vec_col, n_cells, nprobe, centroids
     )
     dots = (
-        cand.join(qry_e.select(F.col("id").alias("q_id"), "pos", F.col("val").alias("q_val")),
-                  "q_id")
-        .join(corp_e.select(F.col("id").alias("c_id"), "pos", F.col("val").alias("c_val2")),
-              ["c_id", "pos"])
+        cand.join(_exploded(queries, id_col, vec_col, "q_id", "q_val"), "q_id")
+        .join(_exploded(corpus, id_col, vec_col, "c_id", "c_val"), ["c_id", "pos"])
         .groupBy("q_id", "c_id")
-        .agg(_exact_sum_of_products(F.col("q_val"), F.col("c_val2")).alias("dot"))
+        .agg(_exact_sum_of_products(F.col("q_val"), F.col("c_val")).alias("dot"))
     )
-    c_norms = _norms(corpus, id_col, vec_col, "nrm")
-    q_norms = _norms(queries, id_col, vec_col, "nrm")
-    scored = (
-        dots.join(q_norms.withColumnRenamed(id_col, "q_id").withColumnRenamed("nrm", "qn"), "q_id")
-        .join(c_norms.withColumnRenamed(id_col, "c_id").withColumnRenamed("nrm", "cn"), "c_id")
-        .withColumn("cosine", F.col("dot") / (F.col("qn") * F.col("cn")))
+    scored = dots.join(
+        _norms(queries, id_col, vec_col, "q_id", "q_norm"), "q_id"
+    ).join(_norms(corpus, id_col, vec_col, "c_id", "c_norm"), "c_id")
+    return _ranked_cosines(_cosine(scored, F.col("dot"), "q_norm", "c_norm"), k)
+
+
+def _pq_exploded(df: DataFrame, id_col: str, vec_col: str, sub_dim: int,
+                 out_id: str) -> DataFrame:
+    """(out_id, pos, val, s): exploded components with their subspace."""
+    return _exploded(df, id_col, vec_col, out_id).withColumn(
+        "s", F.floor(F.col("pos") / sub_dim)
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
+
+
+def _pq_encode(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    sub_dim: int,
+    n_codes: int,
+    codebooks: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The PQ stage: ``(codes, table)``. ``codes`` (c_id, s, j) holds each
+    corpus vector's L2-argmin codeword per subspace (grid-exact distances,
+    ties to the lowest id); ``table`` (q_id, s, j, pdot) is each query's
+    ADC lookup table, its exact dot with every codeword per subspace.
+    Codewords come from ``codebooks`` (j, pos, c_val) or, when None, from
+    the ``n_codes`` lowest-id corpus vectors."""
+    e = _pq_exploded(corpus, id_col, vec_col, sub_dim, "id")
+    if codebooks is not None:
+        cb = codebooks.select(
+            "j", "pos", F.col("c_val").cast("double").alias("c_val")
+        )
+    else:
+        cb = e.filter(F.col("id") < n_codes).select(
+            F.col("id").alias("j"), "pos", F.col("val").alias("c_val")
+        )
+    dist2 = F.floor(
+        (F.col("val") - F.col("c_val")) * (F.col("val") - F.col("c_val"))
+        * F.lit(_GRID) + F.lit(0.5)
+    ).cast("decimal(38,0)")
+    enc = (
+        e.join(F.broadcast(cb), "pos")
+        .groupBy("id", "s", "j")
+        .agg((F.sum(dist2).cast("double") / F.lit(_GRID)).alias("dist"))
+    )
+    codes = _top_k(enc, ["id", "s"], ["dist", "j"], 1).select(
+        F.col("id").alias("c_id"), "s", "j"
+    )
+    table = (
+        _pq_exploded(queries, id_col, vec_col, sub_dim, "q_id")
+        .join(F.broadcast(cb), "pos")
+        .groupBy("q_id", "s", "j")
+        .agg(_exact_sum_of_products(F.col("val"), F.col("c_val")).alias("pdot"))
+    )
+    return codes, table
+
+
+def _adc_topk(lookups: DataFrame, k: int) -> DataFrame:
+    """Sum each (q_id, c_id)'s table lookups into ``approx_dot`` and cut
+    the top k per query. pdot is an exact multiple of 2^-40, so
+    pdot * 2^40 is an integral double and the decimal re-sum keeps the
+    m-term ADC total exact too."""
+    adc = (
+        F.sum((F.col("pdot") * F.lit(_GRID)).cast("decimal(38,0)")).cast("double")
+        / F.lit(_GRID)
+    )
+    scored = lookups.groupBy("q_id", "c_id").agg(adc.alias("approx_dot"))
+    return _top_k(scored, "q_id", [F.col("approx_dot").desc(), "c_id"], k).select(
+        "q_id", "c_id", "approx_dot", "rank"
     )
 
 
@@ -439,78 +523,13 @@ def pq_topk(
     one broadcast join + agg over the exploded corpus (map-side);
     scoring joins the m-row-per-vector code table against the
     m × n_codes query table — no raw-vector shuffle anywhere."""
-    e = _pq_exploded(corpus, id_col, vec_col, sub_dim, "id")
-    if codebooks is not None:
-        cb = codebooks.select(
-            "j", "pos", F.col("c_val").cast("double").alias("c_val")
-        )
-    else:
-        cb = e.filter(F.col("id") < n_codes).select(
-            F.col("id").alias("j"), "pos", F.col("val").alias("c_val")
-        )
-    codes = _pq_codes(e, cb)
-    qtab = _pq_query_table(
-        _pq_exploded(queries, id_col, vec_col, sub_dim, "q_id"), cb
+    codes, table = _pq_encode(
+        corpus, queries, id_col, vec_col, sub_dim, n_codes, codebooks
     )
-    scored = (
-        codes.join(F.broadcast(qtab), ["s", "j"])
-        .filter(F.col("q_id") != F.col("c_id"))
-        .groupBy("q_id", "c_id")
-        .agg(_pq_adc_sum().alias("approx_dot"))
+    lookups = codes.join(F.broadcast(table), ["s", "j"]).filter(
+        F.col("q_id") != F.col("c_id")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("approx_dot").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "approx_dot", "rank")
-    )
-
-
-def _pq_exploded(df: DataFrame, id_col: str, vec_col: str, sub_dim: int,
-                 out_id: str) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias(out_id), F.posexplode(F.col(vec_col)).alias("pos", "val")
-    ).withColumn("val", F.col("val").cast("double")) \
-     .withColumn("s", F.floor(F.col("pos") / sub_dim))
-
-
-def _pq_codes(e: DataFrame, cb: DataFrame) -> DataFrame:
-    """Encode each vector: per subspace, the L2-argmin codeword id (grid-
-    exact distances, ties to the lowest id). Returns (c_id, s, j)."""
-    dist2 = F.floor(
-        (F.col("val") - F.col("c_val")) * (F.col("val") - F.col("c_val"))
-        * F.lit(_GRID) + F.lit(0.5)
-    ).cast("decimal(38,0)")
-    enc = (
-        e.join(F.broadcast(cb), "pos")
-        .groupBy("id", "s", "j")
-        .agg((F.sum(dist2).cast("double") / F.lit(_GRID)).alias("dist"))
-    )
-    w_enc = Window.partitionBy("id", "s").orderBy("dist", "j")
-    return (
-        enc.withColumn("__r", F.row_number().over(w_enc))
-        .filter(F.col("__r") == 1)
-        .select(F.col("id").alias("c_id"), "s", "j")
-    )
-
-
-def _pq_query_table(qe: DataFrame, cb: DataFrame) -> DataFrame:
-    """Per-query ADC lookup table: exact dot of every query against every
-    codeword per subspace. Returns (q_id, s, j, pdot)."""
-    return (
-        qe.join(F.broadcast(cb), "pos")
-        .groupBy("q_id", "s", "j")
-        .agg(_exact_sum_of_products(F.col("val"), F.col("c_val")).alias("pdot"))
-    )
-
-
-def _pq_adc_sum() -> Column:
-    # pdot is an exact multiple of 2^-40, so pdot * 2^40 is an integral
-    # double — the decimal re-sum keeps the m-term ADC total exact too
-    return (
-        F.sum((F.col("pdot") * F.lit(_GRID)).cast("decimal(38,0)")).cast("double")
-        / F.lit(_GRID)
-    )
+    return _adc_topk(lookups, k)
 
 
 def ivf_pq_topk(
@@ -532,53 +551,26 @@ def ivf_pq_topk(
     search touches ~nprobe/n_cells of the corpus, and what it touches
     is bytes per vector.
 
-    Same deterministic conventions as the parts: seed centroids
-    (lowest-id vectors) for the cells, seed codebooks for the
-    subspaces, grid-exact arithmetic throughout — so the composition is
-    oracle-checkable end to end like each part alone. Returns
-    (q_id, c_id, approx_dot, rank) with ADC-approximate scores."""
-    # IVF half: cell assignment over the plain exploded vectors
-    cents = corpus.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("c_vec")
+    Literally the two stages composed — :func:`_ivf_candidates` then
+    :func:`_pq_encode` — with the same deterministic seeds (lowest-id
+    vectors for cells and codebooks) and grid-exact arithmetic, so the
+    composition is oracle-checkable end to end like each part alone.
+    Returns (q_id, c_id, approx_dot, rank) with ADC-approximate scores."""
+    cand = _ivf_candidates(corpus, queries, id_col, vec_col, n_cells, nprobe)
+    codes, table = _pq_encode(corpus, queries, id_col, vec_col, sub_dim, n_codes)
+    lookups = cand.join(codes, "c_id").join(
+        F.broadcast(table), ["q_id", "s", "j"]
     )
-    ce = cents.select(
-        "cell", F.posexplode("c_vec").alias("pos", "c_val")
-    ).withColumn("c_val", F.col("c_val").cast("double"))
-    cn = ce.groupBy("cell").agg(
-        F.sqrt(_exact_sum_of_products(F.col("c_val"), F.col("c_val"))).alias("cell_norm")
-    )
-    corp_e = _exploded(corpus, id_col, vec_col, "x").withColumnRenamed("x_id", "id")\
-        .withColumnRenamed("x_val", "val")
-    qry_e = _exploded(queries, id_col, vec_col, "x").withColumnRenamed("x_id", "id")\
-        .withColumnRenamed("x_val", "val")
-    corp_cells = _assign_cells(corp_e, ce, cn, "id", 1)
-    qry_cells = _assign_cells(qry_e, ce, cn, "id", nprobe).withColumnRenamed("id", "q_id")
-    cand = (
-        qry_cells.join(corp_cells, "cell")
-        .select("q_id", F.col("id").alias("c_id"))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .distinct()
-    )
-    # PQ half: encode the corpus, table the queries, ADC-score candidates
-    e = _pq_exploded(corpus, id_col, vec_col, sub_dim, "id")
-    cb = e.filter(F.col("id") < n_codes).select(
-        F.col("id").alias("j"), "pos", F.col("val").alias("c_val")
-    )
-    codes = _pq_codes(e, cb)
-    qtab = _pq_query_table(
-        _pq_exploded(queries, id_col, vec_col, sub_dim, "q_id"), cb
-    )
-    scored = (
-        cand.join(codes, "c_id")
-        .join(F.broadcast(qtab), ["q_id", "s", "j"])
-        .groupBy("q_id", "c_id")
-        .agg(_pq_adc_sum().alias("approx_dot"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("approx_dot").desc(), F.col("c_id"))
+    return _adc_topk(lookups, k)
+
+
+def _neardups(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Vector pairs at cosine >= ``threshold``, as (id_a, id_b, block,
+    cosine)."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "approx_dot", "rank")
+        _pair_cosine(pairs)
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", "block", "cosine")
     )
 
 
@@ -589,7 +581,6 @@ def embedding_neardup_pairs(
     block_col: str = "label",
     threshold: float = 0.95,
     block_window: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within a blocking key — the
     fifth dedup strategy (SURVEY §2.9). Attribute blocking is the
@@ -597,21 +588,17 @@ def embedding_neardup_pairs(
     corpus, so at scale use :func:`embedding_neardup_pairs_lsh`, whose
     hyperplane buckets keep block size ~N/2^b regardless of N.
 
-    Plan (round 8 — the round-7 sf1 audit timed out the old exploded
-    per-component join): each candidate pair scores its dot in a single
-    O(d) fold (:func:`_exact_dot_cols`, bit-identical grid-snapped
-    decimal sum), so the pair join shuffles 1 row of 2 vectors instead
-    of d component rows — a factor-of-d shuffle cut, same values.
-    ``block_window=W`` additionally bounds a linearly-growing block the
-    same way ``bucket_window`` bounds degenerate LSH buckets in
-    :func:`dedup.minhash_candidate_pairs`: each vector is compared only
-    with its W id-ordered successors inside its block (b·W pairs, not
-    b²/2; duplicate clusters survive via successor chaining). The rank
-    comes from :func:`dedup.blocked_rank` — bounded-cardinality blocks
-    must not become one whole-block window sort. ``None`` keeps the
-    exhaustive in-block semantics."""
+    Each candidate pair scores its dot in a single O(d) fold
+    (:func:`_exact_dot_cols`), so the pair join shuffles 1 row of 2
+    vectors instead of d component rows. ``block_window=W`` bounds a
+    linearly-growing block (the exhaustive in-block join timed out at
+    sf1): each vector is compared only with its W id-ordered successors
+    inside its block (:func:`dedup._successor_pairs`), ranked by
+    :func:`dedup.blocked_rank` — bounded-cardinality blocks must not
+    become one whole-block window sort — and the vectors join in after
+    the candidate join. ``None`` keeps the exhaustive in-block
+    semantics."""
     from data_integration_case_study_spark.operators import cache
-    from data_integration_case_study_spark.operators.dedup import blocked_rank
 
     base = df.select(
         F.col(id_col).alias("id"),
@@ -620,53 +607,42 @@ def embedding_neardup_pairs(
         _exact_norm_col(F.col(vec_col)).alias("nrm"),
     )
     if block_window is None:
-        a = base.select(
-            F.col("id").alias("id_a"), "block",
-            F.col("v").alias("va"), F.col("nrm").alias("norm_a"),
-        )
-        b = base.select(
-            F.col("id").alias("id_b"), "block",
-            F.col("v").alias("vb"), F.col("nrm").alias("norm_b"),
-        )
-        scored = a.join(b, "block").filter(F.col("id_a") < F.col("id_b"))
+        return _neardups(_self_pairs(base, "block", ["v", "nrm"]), threshold)
+    # base feeds both verify sides and the rank
+    base = cache.track(base)
+    ranked = blocked_rank(base.select("id", "block"), "block", "id")
+    pairs = _successor_pairs(ranked, "block", block_window)
+    return _neardups(_attach(pairs, base, ["v", "nrm"]), threshold)
+
+
+def _lsh_base(
+    df: DataFrame, id_col: str, vec_col: str, n_planes: int | None,
+    seed: int, target_bucket_size: int,
+) -> DataFrame:
+    """(id, block, v, nrm) with ``block`` the random-hyperplane bucket:
+    the base the LSH pair operators join to itself. ``n_planes=None``
+    derives the plane count from the corpus size
+    (:func:`functions.vector.adaptive_n_planes`, one count) so the
+    expected bucket population stays at ``target_bucket_size`` as the
+    corpus grows — a fixed plane count would make the pair join
+    quadratic in N. Persisted through the tracked cache (it feeds both
+    pair sides; unpersisted, Spark recomputes the signatures per read;
+    release with ``operators.cache.release_tracked()``)."""
+    from data_integration_case_study_spark.operators import cache
+
+    if n_planes is None:
+        n, dim = _count_and_dim(df, vec_col)
+        n_planes = adaptive_n_planes(n, target_bucket_size)
     else:
-        base = cache.track(base) if persist else base
-        ranked = blocked_rank(base.select("id", "block"), "block", "id")
-        # repartition after the W-way explode — see dedup.ngram_jaccard_
-        # pairs: AQE coalesces the tiny ranked shuffle to ~1 partition
-        # and the broadcast-only downstream would single-task the verify
-        probes = ranked.select(
-            F.col("id").alias("id_a"),
-            "block",
-            F.explode(
-                F.sequence(F.col("__r") + 1, F.col("__r") + block_window)
-            ).alias("__r"),
-        ).repartition(F.col("block"), F.col("__r"))
-        cand = probes.join(
-            ranked.select(F.col("id").alias("id_b"), "block", "__r"),
-            ["block", "__r"],
-        ).select("id_a", "id_b", "block")
-        scored = cand.join(
-            base.select(
-                F.col("id").alias("id_a"),
-                F.col("v").alias("va"), F.col("nrm").alias("norm_a"),
-            ),
-            "id_a",
-        ).join(
-            base.select(
-                F.col("id").alias("id_b"),
-                F.col("v").alias("vb"), F.col("nrm").alias("norm_b"),
-            ),
-            "id_b",
+        dim = _fixed_dim(df, vec_col)
+    sig = random_hyperplane_signature(F.col(vec_col), n_planes, seed, dim=dim)
+    return cache.track(
+        df.select(
+            F.col(id_col).alias("id"),
+            sig.alias("block"),
+            F.col(vec_col).alias("v"),
+            _exact_norm_col(F.col(vec_col)).alias("nrm"),
         )
-    return (
-        scored.withColumn(
-            "cosine",
-            _exact_dot_cols(F.col("va"), F.col("vb"))
-            / (F.col("norm_a") * F.col("norm_b")),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "block", "cosine")
     )
 
 
@@ -678,65 +654,22 @@ def embedding_neardup_pairs_lsh(
     n_planes: int | None = None,
     seed: int = 42,
     target_bucket_size: int = 16,
-    cache_base: bool = True,
 ) -> DataFrame:
     """Embedding near-dup pairs blocked by the random-hyperplane LSH
     bucket — the 100 TB form of :func:`embedding_neardup_pairs`.
 
     The bucket replaces the data attribute as the blocking key, so block
-    size is ~N/2^n_planes by construction (tunable), not corpus-linear.
-    ``n_planes=None`` (the default) derives the plane count from the
-    corpus size via :func:`functions.vector.adaptive_n_planes`
-    (one metadata-cheap count), holding expected bucket population at
-    ``target_bucket_size`` so the pair join stays ~linear as the corpus
-    grows — a fixed plane count would re-quadratize it.
-    Cost: high-cosine pairs land in the same bucket with probability
-    (1 - θ/π)^n_planes (θ = angle), so a single-probe blocking trades a
-    small recall loss for the bounded join — exactly the LSH contract.
+    size is ~N/2^n_planes by construction (see :func:`_lsh_base` for the
+    plane count), not corpus-linear. Cost: high-cosine pairs land in the
+    same bucket with probability (1 - θ/π)^n_planes (θ = angle), so a
+    single-probe blocking trades a small recall loss for the bounded
+    join — exactly the LSH contract. Whole vectors and norms ride
+    through the one bucket-keyed self-join and each pair's dot is one
+    O(d) fold, so the operator has one exchange on the bucket key.
     Same exact decimal scoring; sha256-derived buckets keep it
     oracle-checkable. Output block = the shared bucket id."""
-    if n_planes is None:
-        n, dim = _count_and_dim(df, vec_col)
-        n_planes = adaptive_n_planes(n, target_bucket_size)
-    else:
-        dim = _fixed_dim(df, vec_col)
-    sig = random_hyperplane_signature(F.col(vec_col), n_planes, seed, dim=dim)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        sig.alias("block"),
-        F.col(vec_col).alias("v"),
-        _exact_norm_col(F.col(vec_col)).alias("nrm"),
-    )
-    if cache_base:
-        # base feeds both pair sides; tracked persist
-        # (operators.cache.release_tracked) — same contract as knn_graph
-        from data_integration_case_study_spark.operators import cache
-
-        base = cache.track(base)
-    # One bucket-keyed self-join carrying whole vectors; each pair row
-    # scores its dot in a single O(d) fold (see _exact_dot_cols — a
-    # factor-of-d less shuffle than the exploded per-component join) and
-    # norms ride along map-only from base, so the whole operator is one
-    # Exchange on the bucket key.
-    a = base.select(
-        F.col("id").alias("id_a"), "block",
-        F.col("v").alias("va"), F.col("nrm").alias("norm_a"),
-    )
-    b = base.select(
-        F.col("id").alias("id_b"), "block",
-        F.col("v").alias("vb"), F.col("nrm").alias("norm_b"),
-    )
-    return (
-        a.join(b, "block")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            _exact_dot_cols(F.col("va"), F.col("vb"))
-            / (F.col("norm_a") * F.col("norm_b")),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "block", "cosine")
-    )
+    base = _lsh_base(df, id_col, vec_col, n_planes, seed, target_bucket_size)
+    return _neardups(_self_pairs(base, "block", ["v", "nrm"]), threshold)
 
 
 def knn_graph(
@@ -746,7 +679,6 @@ def knn_graph(
     k: int = 3,
     n_planes: int | None = None,
     seed: int = 42,
-    cache_base: bool = True,
     target_bucket_size: int = 32,
 ) -> DataFrame:
     """Approximate k-NN GRAPH: every vector's top-k neighbors within its
@@ -756,72 +688,27 @@ def knn_graph(
     diversity sampling, and kNN-density outlier pruning.
 
     Scale shape: signatures are map-only; the bucket-local pair join is
-    Σ|bucket|² with |bucket| ~ N/2^n_planes by construction.
-    ``n_planes=None`` (the default) derives the plane count from the
-    corpus size (:func:`functions.vector.adaptive_n_planes`, one
-    metadata-cheap count) so per-bucket work holds ~constant at
-    ``target_bucket_size`` as N grows; a fixed plane count would make
-    the pair join quadratic in N. The top-k cut is a per-source window
-    over bucket-local candidates only. Vectors whose bucket holds no
+    Σ|bucket|² with |bucket| ~ N/2^n_planes by construction (see
+    :func:`_lsh_base`). The top-k cut is a per-source window over
+    bucket-local candidates only. Vectors whose bucket holds no
     neighbor emit no edges — the documented recall trade; multi-probe or
     fewer planes raise recall exactly as in :func:`ann_lsh_topk`.
 
-    Computes each unordered pair's exact decimal cosine ONCE, then
-    mirrors the edge list before ranking (graph edges are directed:
-    a→b and b→a rank independently in their source's top-k).
-
-    The (id, block, vector) base is spread to the cluster parallelism
+    Computes each unordered pair's exact decimal cosine ONCE, in the one
+    bucket-keyed self-join, then mirrors the edge list before ranking
+    (graph edges are directed: a→b and b→a rank independently in their
+    source's top-k). The input is spread to the cluster parallelism
     BEFORE the signature map (a small parquet scans as 1-2 partitions,
-    and the sha256-derived signature is the CPU-heavy step) and persisted
-    (it feeds both pair sides and the norm agg — unpersisted, Spark
-    recomputes the signatures for each read; cache lifecycle is
-    caller-owned, same contract as the MinHash summaries)."""
+    and the sha256-derived signature is the CPU-heavy step)."""
     from data_integration_case_study_spark.sources.readers import (
         spread_to_parallelism,
     )
 
-    if n_planes is None:
-        n, dim = _count_and_dim(df, vec_col)
-        n_planes = adaptive_n_planes(n, target_bucket_size)
-    else:
-        dim = _fixed_dim(df, vec_col)
-    sig = random_hyperplane_signature(F.col(vec_col), n_planes, seed, dim=dim)
-    base = spread_to_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        sig.alias("block"),
-        F.col(vec_col).alias("v"),
-        _exact_norm_col(F.col(vec_col)).alias("nrm"),
+    base = _lsh_base(
+        spread_to_parallelism(df), id_col, vec_col, n_planes, seed,
+        target_bucket_size,
     )
-    if cache_base:
-        # cache lifecycle is caller-owned (spark.catalog.clearCache
-        # between pipeline stages, or operators.cache.release_tracked()
-        # for library sessions); pass cache_base=False to keep the
-        # operator persist-free and recompute signatures per read
-        from data_integration_case_study_spark.operators import cache
-
-        base = cache.track(base)
-    # Bucket-keyed self-join over whole vectors; each unordered pair is
-    # scored once by a single O(d) fold (_exact_dot_cols) with both
-    # norms riding along map-only — one Exchange on the bucket key,
-    # a factor-of-d less shuffle than the exploded per-component join.
-    a = base.select(
-        F.col("id").alias("id_a"), "block",
-        F.col("v").alias("va"), F.col("nrm").alias("norm_a"),
-    )
-    b = base.select(
-        F.col("id").alias("id_b"), "block",
-        F.col("v").alias("vb"), F.col("nrm").alias("norm_b"),
-    )
-    scored = (
-        a.join(b, "block")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            _exact_dot_cols(F.col("va"), F.col("vb"))
-            / (F.col("norm_a") * F.col("norm_b")),
-        )
-        .select("id_a", "id_b", "cosine")
-    )
+    scored = _pair_cosine(_self_pairs(base, "block", ["v", "nrm"]))
     edges = scored.select(
         F.col("id_a").alias("src_id"), F.col("id_b").alias("nbr_id"), "cosine"
     ).unionByName(
@@ -829,9 +716,6 @@ def knn_graph(
             F.col("id_b").alias("src_id"), F.col("id_a").alias("nbr_id"), "cosine"
         )
     )
-    w = Window.partitionBy("src_id").orderBy(F.col("cosine").desc(), F.col("nbr_id"))
-    return (
-        edges.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("src_id", "nbr_id", "cosine", "rank")
-    )
+    return _top_k(
+        edges, "src_id", [F.col("cosine").desc(), "nbr_id"], k
+    ).select("src_id", "nbr_id", "cosine", "rank")

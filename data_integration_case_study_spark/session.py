@@ -14,12 +14,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Local core count: the session runs ``local[LOCAL_CORES]`` with as many
+# shuffle partitions, and bench fingerprints report this same number.
+LOCAL_CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def get_spark(
     app_name: str = "data-integration-case-study-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -40,13 +41,12 @@ def get_spark(
       but pinned here so the scan contract (PushedFilters in .explain) is
       explicit and survives config drift.
     """
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cores}]")
+        .master(f"local[{LOCAL_CORES}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or LOCAL_CORES),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

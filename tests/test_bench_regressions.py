@@ -291,3 +291,31 @@ def test_regressions_compact_surfaces_confirm_load_context(tmp_path):
     out2 = bench._regressions({"a": 1.0, "b": 1.0}, tmp_path,
                               remeasure=lambda name: 1.0, loads={})
     assert "worst_load_avg_1m" not in bench._regressions_compact(out2)
+
+
+def test_fingerprint_cpus_match_the_session_master():
+    """With SPARK_GRAFT_CPUS unset, the env fingerprint reports the core
+    count the session factory gives its master, local[N]. Run in a fresh
+    interpreter: the count is read once, when session.py is imported."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from unittest import mock\n"
+        "import bench\n"
+        "from data_integration_case_study_spark import session\n"
+        "with mock.patch.object(session, 'SparkSession') as ss:\n"
+        "    session.get_spark()\n"
+        "print(ss.builder.appName.return_value.master.call_args.args[0])\n"
+        "print(bench._env_fingerprint()['cpus'])\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True,
+        text=True, timeout=120, check=True,
+        cwd=Path(__file__).resolve().parent.parent,
+    ).stdout.split()
+    master, cpus = out[-2], out[-1]
+    assert master == f"local[{cpus}]"

@@ -334,3 +334,116 @@ def test_blocked_rank_matches_window_rank(spark, sf_dir):
         # release it so later plan-shape tests see no InMemoryRelation
         cache.release_tracked()
         spark.catalog.clearCache()
+
+
+def _node_counts(df):
+    """Executed-plan node counts (the AQE initial plan, cached subplans
+    included): Exchange (shuffle + broadcast), SortMergeJoin and
+    BroadcastHashJoin."""
+    import re
+    from collections import Counter
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    names = Counter(
+        re.findall(r"^[\s:|+\-]*(?:\*\(\d+\) )?(\w+)", plan, re.MULTILINE)
+    )
+    return {
+        "Exchange": names["Exchange"] + names["BroadcastExchange"],
+        "SortMergeJoin": names["SortMergeJoin"],
+        "BroadcastHashJoin": names["BroadcastHashJoin"],
+    }
+
+
+def _walk(node):
+    """Physical plan nodes below ``node`` through children only — a
+    cached relation's own plan is not a child of its scan."""
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _walk(kids.apply(i))
+
+
+def test_corpus_curation_operators_plan_shape(spark, sf_dir):
+    # The four pair/top-k operators the corpus_curation benchmark runs
+    # keep their exchange and join counts through refactors: a helper
+    # that adds a shuffle or turns a broadcast into a sort-merge join
+    # fails here before any benchmark notices.
+    from pyspark.sql import functions as F
+
+    from data_integration_case_study_spark.operators import (
+        cache,
+        dedup,
+        similarity,
+    )
+    from data_integration_case_study_spark.sources.readers import (
+        read_parquet_table,
+    )
+
+    docs = read_parquet_table(spark, sf_dir, "documents")
+    emb = read_parquet_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 16)
+    expected = {
+        "minhash_candidate_pairs": (
+            lambda: dedup.minhash_candidate_pairs(
+                docs, "doc_id", "text", n=3, num_hashes=32, bands=8,
+                threshold=0.5,
+            ),
+            {"Exchange": 8, "SortMergeJoin": 0, "BroadcastHashJoin": 3},
+        ),
+        "simhash_near_pairs": (
+            lambda: dedup.simhash_near_pairs(docs, "doc_id", "text", 3),
+            {"Exchange": 3, "SortMergeJoin": 0, "BroadcastHashJoin": 1},
+        ),
+        "cosine_topk_bruteforce": (
+            lambda: similarity.cosine_topk_bruteforce(emb, queries, k=10),
+            {"Exchange": 7, "SortMergeJoin": 0, "BroadcastHashJoin": 3},
+        ),
+        "ann_lsh_topk": (
+            lambda: similarity.ann_lsh_topk(emb, queries, k=10, n_planes=4),
+            {"Exchange": 2, "SortMergeJoin": 0, "BroadcastHashJoin": 1},
+        ),
+    }
+    got = {}
+    for name, (build, _) in expected.items():
+        spark.catalog.clearCache()
+        try:
+            got[name] = _node_counts(build())
+        finally:
+            cache.release_tracked()
+            spark.catalog.clearCache()
+    assert got == {name: counts for name, (_, counts) in expected.items()}
+
+
+def test_lsh_pair_join_has_one_bucket_keyed_exchange(spark, sf_dir):
+    # embedding_neardup_pairs_lsh and knn_graph join the persisted
+    # (id, bucket, vector, norm) base to itself on the bucket: each such
+    # join has exactly one exchange below it (the other side scans the
+    # cache), so vectors cross the network once per pair join. knn_graph
+    # mirrors its scored pairs through a union, so its plan holds the
+    # same join twice.
+    from data_integration_case_study_spark.operators import cache, similarity
+    from data_integration_case_study_spark.sources.readers import (
+        read_parquet_table,
+    )
+
+    emb = read_parquet_table(spark, sf_dir, "embeddings")
+
+    def bucket_join_exchanges(df):
+        root = df._jdf.queryExecution().executedPlan().initialPlan()
+        return [
+            sum(1 for m in _walk(j) if m.nodeName().endswith("Exchange"))
+            for j in _walk(root)
+            if j.nodeName().endswith("Join")
+            and j.leftKeys().toString().startswith("List(block#")
+        ]
+
+    for build, expected in (
+        (lambda: similarity.embedding_neardup_pairs_lsh(emb, threshold=0.99), [1]),
+        (lambda: similarity.knn_graph(emb, k=3), [1, 1]),
+    ):
+        spark.catalog.clearCache()
+        try:
+            assert bucket_join_exchanges(build()) == expected
+        finally:
+            cache.release_tracked()
+            spark.catalog.clearCache()

@@ -118,15 +118,10 @@ def test_pq_topk_recall_and_shape(spark, sf_dir):
 def test_topk_strategy_dispatch(spark, sf_dir):
     e = read_parquet_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 3)
-    # small corpus → auto picks brute force (exact answer)
-    auto = similarity.topk(e, q, k=3, mode="auto")
-    brute = similarity.topk(e, q, k=3, mode="brute")
+    # small corpus → the size dispatch picks brute force (exact answer)
+    auto = similarity.topk(e, q, k=3)
+    brute = similarity.cosine_topk_bruteforce(e, q, k=3)
     assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, brute.collect()))
-    # forced-LSH path returns well-formed ranked output
-    lsh = similarity.topk(e, q, k=3, mode="lsh", n_planes=4, probe_bits=4)
-    assert all(r["rank"] <= 3 for r in lsh.collect())
-    with pytest.raises(ValueError, match="unknown mode"):
-        similarity.topk(e, q, mode="nope")
 
 
 def test_embedding_neardup_pairs_synthetic(spark):
@@ -557,3 +552,44 @@ def test_extract_features_per_row_shim(spark):
     rows = mm.extract_features(p).collect()
     assert rows[0]["decoder"] == "fake_decoder"
     assert rows[0]["features"] == mm.fake_decoder(b"hello")
+
+
+def test_zero_vector_is_nobodys_neighbour(spark):
+    """A zero vector has no direction: every cosine operator must run
+    under ANSI division (no DIVIDE_BY_ZERO), never return it as a
+    neighbour and give it no neighbours of its own; a zero IVF seed
+    centroid is nobody's cell."""
+    from data_integration_case_study_spark.operators import cache
+
+    rows = [
+        (0, [0.0, 0.0, 0.0], 0), (1, [1.0, 0.0, 0.0], 0),
+        (2, [1.0, 0.1, 0.0], 0), (3, [0.0, 1.0, 0.0], 0),
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    try:
+        runs = {
+            "cosine_topk_bruteforce": similarity.cosine_topk_bruteforce(df, df, k=3),
+            "ann_lsh_topk": similarity.ann_lsh_topk(df, df, k=3, n_planes=2),
+            "embedding_neardup_pairs": similarity.embedding_neardup_pairs(df),
+            "embedding_neardup_pairs_lsh": similarity.embedding_neardup_pairs_lsh(
+                df, n_planes=1
+            ),
+            "knn_graph": similarity.knn_graph(df, k=3, n_planes=1),
+            # cell 0 is seeded from the zero vector
+            "ivf_topk": similarity.ivf_topk(df, df, k=3, n_cells=2, nprobe=2),
+        }
+        for name, out in runs.items():
+            got = out.collect()
+            ids = {r[c] for r in got for c in out.columns if c.endswith("_id")
+                   or c in ("id_a", "id_b")}
+            assert 0 not in ids, (name, got)
+            assert all(r["cosine"] is not None for r in got), name
+        pairs = runs["embedding_neardup_pairs"].collect()
+        assert [(p["id_a"], p["id_b"]) for p in pairs] == [(1, 2)]
+        brute = runs["cosine_topk_bruteforce"].collect()
+        assert {r["q_id"] for r in brute} == {1, 2, 3}
+    finally:
+        cache.release_tracked()

@@ -354,10 +354,10 @@ def test_connected_components_round_budget(spark):
         connected_components(chain, max_iter=4).collect()
 
 
-def test_ngram_bitset_verify_matches_array_verify(spark):
-    """r12: the window path's fixed-width bitset verify (small numeric
-    vocab) must emit exactly the pairs and jaccard doubles of the array
-    verify (forced via bitset_max_vocab=0), including across the 64-bit
+def test_ngram_bitset_verify_matches_array_verify(spark, monkeypatch):
+    """The window path's fixed-width bitset verify (small numeric vocab)
+    must emit exactly the pairs and jaccard doubles of the array verify
+    (forced by a zero _BITSET_MAX_VOCAB), including across the 64-bit
     word boundary (vocab > 64 values -> 2 mask words)."""
     import random
 
@@ -387,11 +387,13 @@ def test_ngram_bitset_verify_matches_array_verify(spark):
         hdf, "id", "t", "blk", threshold=0.3, n=1, tokens_col="__ht",
         block_window=16,
     )
+    got_fast = rows(fast)
+    monkeypatch.setattr(dedup, "_BITSET_MAX_VOCAB", 0)
     slow = dedup.ngram_jaccard_pairs(
         hdf, "id", "t", "blk", threshold=0.3, n=1, tokens_col="__ht",
-        block_window=16, bitset_max_vocab=0,
+        block_window=16,
     )
-    got_fast, got_slow = rows(fast), rows(slow)
+    got_slow = rows(slow)
     assert got_fast, "test must produce pairs"
     assert got_fast == got_slow
 
@@ -408,3 +410,61 @@ def test_ngram_window_path_on_empty_vocabulary(spark):
         out = dedup.ngram_jaccard_pairs(df, "id", "t", "blk", block_window=4)
         assert out.columns == ["id_a", "id_b", "block", "jaccard"]
         assert out.collect() == []
+
+
+def test_pair_helpers_match_python_enumeration(spark):
+    """_self_pairs and _successor_pairs (the candidate stages every
+    pair operator is built from) emit exactly the pairs a plain Python
+    enumeration gives — one and two block columns, single-member blocks,
+    a window larger than any block, and an empty frame — and their
+    payload columns and _attach's land on the right end of each pair."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    from pyspark.sql import Window
+
+    rows = [
+        (1, "x", 0), (2, "x", 0), (3, "x", 1), (4, "y", 0), (5, "x", 0),
+        (6, "z", 9), (7, "x", 0), (8, "x", 1),
+    ]
+    schema = "id long, b1 string, b2 int"
+    frames = (
+        (spark.createDataFrame(rows, schema), rows),
+        (spark.createDataFrame([], schema), []),
+    )
+    for frame, data in frames:
+        for on in (["b1"], ["b1", "b2"]):
+            blocks = defaultdict(list)
+            for r in data:
+                blocks[tuple(r[1 + ["b1", "b2"].index(c)] for c in on)].append(r[0])
+            blocks = {k: sorted(ids) for k, ids in blocks.items()}
+
+            def got(pairs):
+                return sorted(map(tuple, pairs.select("id_a", "id_b", *on).collect()))
+
+            assert got(dedup._self_pairs(frame, on)) == sorted(
+                (a, b, *k) for k, ids in blocks.items()
+                for a, b in combinations(ids, 2)
+            )
+            ranked = frame.withColumn(
+                "__r", F.row_number().over(Window.partitionBy(*on).orderBy("id"))
+            )
+            for window in (1, 2, 10):  # 10 exceeds every block
+                assert got(dedup._successor_pairs(ranked, on, window)) == sorted(
+                    (ids[i], ids[j], *k) for k, ids in blocks.items()
+                    for i in range(len(ids))
+                    for j in range(i + 1, min(i + window, len(ids) - 1) + 1)
+                ), (on, window)
+
+    df = frames[0][0]
+    payload = dedup._self_pairs(df, "b1", ["b2"]).collect()
+    assert payload and all(
+        (r["b2_a"], r["b2_b"]) == (rows[r["id_a"] - 1][2], rows[r["id_b"] - 1][2])
+        for r in payload
+    )
+    attached = dedup._attach(
+        dedup._self_pairs(df, "b1"), df.withColumn("v", F.col("id") * 10), ["v"]
+    ).collect()
+    assert attached and all(
+        (r["v_a"], r["v_b"]) == (r["id_a"] * 10, r["id_b"] * 10) for r in attached
+    )
